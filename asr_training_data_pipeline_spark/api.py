@@ -108,97 +108,6 @@ _PRIORITY = (
     "rfm_segments",
     "sink_training_shards",
 )
-# Wave-9 list, retired by wave 10 (kept for the ledger trail):
-_WAVE9 = (
-    # ------------------------------------------------------------------
-    # r12 rotation wave 9 (VERDICT r11 task 2). Composition of the 50:
-    #   * flagship word_coverage;
-    #   * the TEN single-green members (ledger recomputed from
-    #     CORRECTNESS_r02-r11 this round; VERDICT r11 confirmed the
-    #     same set): the eight r10 TPC-H completions (q8/q9/q11/q12/
-    #     q16/q17/q19/q20 — q16 additionally re-validates the ADVICE
-    #     r11 oracle-side NOT-IN NULL guards), streaming_audio_gate,
-    #     linkage_cjk_residue_demo — second greens let them retire
-    #     under the house rule;
-    #   * changed-code re-validations — every query whose plan the r12
-    #     spread_for_kernel gate touches (the payload-repartition fix,
-    #     VERDICT r11 task 1): dedup_minhash_lsh, dedup_minhash_
-    #     portable, dedup_simhash, dedup_simhash_portable,
-    #     dedup_ngram_jaccard_stopshingle, dedup_winnow_pairs (also an
-    #     r5-era queue member), all seven multimodal kernels, and
-    #     asr_scan_stub;
-    #   * the documented wave-9 queue (oldest-green twos): the r5-era
-    #     block (doc_winnowing, dedup_semantic, dedup_semantic_
-    #     clustered, dedup_exact_hash, asof_join_orders,
-    #     avg_confidence_coalesce, case_adaptive_guard,
-    #     json_extract_props, lag_lead_boundaries, leak_vote_2of3,
-    #     longest_span_top1, moving_avg_range_frame, ms_round_convert,
-    #     range_join_events, sequence_position, first_match_confidence)
-    #     and the r8-era pairs (vocab_coverage, langid_trained,
-    #     dedup_method_eval);
-    #   * the standing rows-only pipeline composites asr_pipeline_clips
-    #     + asr_pipeline_summary (tenth rows each);
-    #   * four filler slots to the oldest last-green twos remaining:
-    #     q1_pricing_summary, scalar_normalize_tokens,
-    #     phoneme_case_extension, positional_pairing (all last green
-    #     r3 — the oldest unretired evidence in the ledger).
-    # Funded by retiring the wave-8 members CORRECTNESS_r11 confirmed
-    # at ≥2 cumulative greens (the r10-new trio second greens, the
-    # r2/r4-r6 debt block third greens, the changed-code re-greens).
-    # Every retiree stays DuckDB-checked on every suite run via
-    # tests/test_oracle_parity.py.
-    # ------------------------------------------------------------------
-    "word_coverage",
-    "q8_market_share",
-    "q9_product_profit",
-    "q11_important_stock",
-    "q12_late_lines",
-    "q16_part_supplier_count",
-    "q17_small_qty_revenue",
-    "q19_discounted_revenue",
-    "q20_promo_suppliers",
-    "streaming_audio_gate",
-    "linkage_cjk_residue_demo",
-    "dedup_minhash_lsh",
-    "dedup_minhash_portable",
-    "dedup_simhash",
-    "dedup_simhash_portable",
-    "dedup_ngram_jaccard_stopshingle",
-    "dedup_winnow_pairs",
-    "multimodal_audio_features",
-    "multimodal_frame_sample",
-    "multimodal_image_resize",
-    "multimodal_phash_dedup",
-    "multimodal_phash_canonical",
-    "multimodal_audio_dedup",
-    "multimodal_audio_canonical",
-    "asr_scan_stub",
-    "doc_winnowing",
-    "dedup_semantic",
-    "dedup_semantic_clustered",
-    "dedup_exact_hash",
-    "asof_join_orders",
-    "avg_confidence_coalesce",
-    "case_adaptive_guard",
-    "json_extract_props",
-    "lag_lead_boundaries",
-    "leak_vote_2of3",
-    "longest_span_top1",
-    "moving_avg_range_frame",
-    "ms_round_convert",
-    "range_join_events",
-    "sequence_position",
-    "first_match_confidence",
-    "vocab_coverage",
-    "langid_trained",
-    "dedup_method_eval",
-    "q1_pricing_summary",
-    "scalar_normalize_tokens",
-    "phoneme_case_extension",
-    "positional_pairing",
-    "asr_pipeline_clips",
-    "asr_pipeline_summary",
-)
 # Rotation queue for the NEXT (wave-11) prefix refresh, in order:
 # (a) re-greens for anything wave 10 leaves single-green or red;
 # (b) queries whose code changes after the wave-10 rotation lands

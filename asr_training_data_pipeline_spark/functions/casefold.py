@@ -157,22 +157,3 @@ PROJECTED_GATE = "^[\\x01-\\x7e]+$"
 def fold_sql(expr: str) -> str:
     """Oracle-side fold: ``translate(expr, FOLD_SRC, FOLD_DST)``."""
     return f"translate({expr}, '{FOLD_SRC}', '{FOLD_DST}')"
-
-
-def proj_sql(expr: str) -> str:
-    """Oracle-side fold + ASCII projection of ``expr``."""
-    return f"translate({fold_sql(expr)}, '{PROJ_SRC}', '{PROJ_DST}')"
-
-
-def fold_col(col):
-    """Spark-side fold Column (same literal tables)."""
-    from pyspark.sql import functions as F
-
-    return F.translate(col, FOLD_SRC, FOLD_DST)
-
-
-def proj_col(col):
-    """Spark-side fold + ASCII projection Column."""
-    from pyspark.sql import functions as F
-
-    return F.translate(fold_col(col), PROJ_SRC, PROJ_DST)

@@ -9,8 +9,8 @@ collapse each side to a per-key token array with a JVM-side
 the two single-row-per-key tables, then run
 ``difflib.SequenceMatcher(autojunk=False)`` (the exact algorithm the
 reference calls — parity by construction) once per row inside ONE
-Arrow-batched pandas UDF that returns an ``array<struct>`` of equal
-runs, exploded back to rows.
+Arrow-batched pandas UDF that returns the equal runs as a struct of
+four index arrays, zipped and exploded back to rows.
 
 This shape beats a cogrouped ``applyInPandas`` by a wide margin at
 high group counts: the cogroup pays a pandas-DataFrame construction
@@ -35,10 +35,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-EQUAL_RUNS_SCHEMA = "pair_id long, bi0 long, bi1 long, ai0 long, ai1 long"
-
-_RUNS_ARRAY_TYPE = "array<struct<bi0:long,bi1:long,ai0:long,ai1:long>>"
-
 # Struct-of-arrays form: one struct of 4 long-arrays per pair. Arrow
 # converts flat numeric arrays ~an order of magnitude faster than an
 # array-of-structs (which materializes one Python dict per run), and
@@ -57,39 +53,11 @@ def _sorted_tokens(order_col: str, norm_col: str = "norm") -> Column:
 
 
 def _make_align_udf(min_run: int):
-    """Pandas UDF: (book tokens, asr tokens) → equal runs of length
-    ≥ min_run, as get_opcodes() 'equal' blocks — bit-identical to
-    claude_research_optimal.py:283-289."""
-
-    @F.pandas_udf(_RUNS_ARRAY_TYPE)
-    def align(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-        for a_col, b_col in it:
-            out = []
-            for a, b in zip(a_col, b_col):
-                a = list(a)
-                b = list(b)
-                if not a or not b:
-                    out.append([])
-                    continue
-                sm = difflib.SequenceMatcher(None, a, b, autojunk=False)
-                out.append(
-                    [
-                        (i1, i2, j1, j2)
-                        for tag, i1, i2, j1, j2 in sm.get_opcodes()
-                        if tag == "equal" and (i2 - i1) >= min_run
-                    ]
-                )
-            yield pd.Series(out)
-
-    return align
-
-
-def _make_align_soa_udf(min_run: int):
-    """Struct-of-arrays variant of the align UDF: same difflib
-    algorithm, but emits (bi0[], bi1[], ai0[], ai1[]) per pair so the
-    Arrow boundary moves flat numeric arrays instead of per-run
-    structs. Used by lcs_equal_runs; the array-of-struct form remains
-    for callers that consume runs as a nested column."""
+    """Pandas UDF: (book tokens, asr tokens) → the get_opcodes()
+    'equal' blocks of length ≥ min_run, bit-identical to
+    claude_research_optimal.py:283-289. Emits (bi0[], bi1[], ai0[],
+    ai1[]) per pair so the Arrow boundary moves flat numeric arrays
+    instead of per-run structs."""
 
     @F.pandas_udf(_RUNS_SOA_TYPE)
     def align(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
@@ -128,43 +96,6 @@ def _explode_runs(df: DataFrame) -> DataFrame:
     return df.select(*keep, F.explode(zipped).alias("e"))
 
 
-def asr_pair_arrays(asr: DataFrame, asr_order: str = "idx") -> DataFrame:
-    """One row per pair with the idx-ordered word arrays
-    (norms/starts/ends/texts/confs) — the collect the alignment join
-    consumes anyway, exposed so clip assembly can SLICE these arrays
-    per run instead of re-joining and re-collecting the 100×-larger
-    word-row table (plans.pipeline.assemble_clips_arrays). Callers
-    persist this frame once; alignment and assembly both read it."""
-    # ONE sort, then column extraction in a follow-up projection:
-    # lambda-bearing expressions are exempt from Spark's subexpression
-    # elimination, so putting five transform(array_sort(...)) results
-    # in the agg would comparator-sort the word array five times per
-    # pair (verified in the optimized plan). CollapseProject keeps the
-    # staged form because the sorted alias is non-cheap.
-    rows = asr.groupBy("pair_id").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col(asr_order),
-                    F.col("norm"),
-                    F.col("start"),
-                    F.col("end"),
-                    F.col("text"),
-                    F.col("confidence"),
-                )
-            )
-        ).alias("_rows")
-    )
-    return rows.select(
-        "pair_id",
-        F.transform("_rows", lambda s: s["norm"]).alias("norms"),
-        F.transform("_rows", lambda s: s["start"]).alias("starts"),
-        F.transform("_rows", lambda s: s["end"]).alias("ends"),
-        F.transform("_rows", lambda s: s["text"]).alias("texts"),
-        F.transform("_rows", lambda s: s["confidence"]).alias("confs"),
-    )
-
-
 def _timed_runs(runs: DataFrame) -> DataFrame:
     """Explode SoA runs carrying (b_starts, b_ends) and resolve each
     run's first-word start / last-word end by position (1-based
@@ -181,31 +112,6 @@ def _timed_runs(runs: DataFrame) -> DataFrame:
     )
 
 
-def lcs_runs_from_arrays(
-    book: DataFrame,
-    pair_words: DataFrame,
-    min_run: int = 4,
-    book_order: str = "pos",
-) -> DataFrame:
-    """``lcs_equal_runs(with_times=True)`` computed from a
-    pre-collected :func:`asr_pair_arrays` frame: same output schema
-    (pair_id, bi0, bi1, ai0, ai1, run_start, run_end), but the ASR
-    collect happens once in the caller's persisted frame instead of
-    inside this plan — one aggregation serves alignment AND assembly."""
-    align = _make_align_soa_udf(min_run)
-    book_arr = book.groupBy("pair_id").agg(_sorted_tokens(book_order).alias("a_toks"))
-    runs = book_arr.join(
-        pair_words.select(
-            "pair_id",
-            F.col("norms").alias("b_toks"),
-            F.col("starts").alias("b_starts"),
-            F.col("ends").alias("b_ends"),
-        ),
-        "pair_id",
-    ).select("pair_id", "b_starts", "b_ends", align("a_toks", "b_toks").alias("r"))
-    return _timed_runs(runs)
-
-
 def lcs_runs_fused(doc_arrays: DataFrame, min_run: int = 4) -> DataFrame:
     """``lcs_equal_runs(with_times=True)`` over a frame that already
     carries BOTH sides as per-key arrays — ``(pair_id, book_norms,
@@ -214,7 +120,7 @@ def lcs_runs_fused(doc_arrays: DataFrame, min_run: int = 4) -> DataFrame:
     share provenance (both derive from the same document row), the
     whole scan → align path is one narrow stage and the word data
     never crosses an exchange."""
-    align = _make_align_soa_udf(min_run)
+    align = _make_align_udf(min_run)
     runs = doc_arrays.select(
         "pair_id",
         F.col("starts").alias("b_starts"),
@@ -249,7 +155,7 @@ def lcs_equal_runs(
     its empty-norm filter, so its indexes are dense positions too —
     claude_research_optimal.py:255-277.)
     """
-    align = _make_align_soa_udf(min_run)
+    align = _make_align_udf(min_run)
     book_arr = book.groupBy("pair_id").agg(_sorted_tokens(book_order).alias("a_toks"))
     if not with_times:
         asr_arr = asr.groupBy("pair_id").agg(_sorted_tokens(asr_order).alias("b_toks"))
@@ -274,27 +180,3 @@ def lcs_equal_runs(
         align("a_toks", "b_toks").alias("r"),
     )
     return _timed_runs(runs)
-
-
-def lcs_pairs_consensus(
-    clip_words: DataFrame,
-    validator_words: DataFrame,
-    key_cols: tuple[str, str] = ("pair_id", "group_id"),
-) -> DataFrame:
-    """J2: consensus alignment between an assembled clip's words and
-    the validator's re-transcription, min_run=1 (every equal block
-    counts, claude_research_optimal.py:365-371). Keyed by
-    (pair_id, group_id) — one clip per group."""
-    align = _make_align_udf(1)
-    keys = list(key_cols)
-    cw_arr = clip_words.groupBy(*keys).agg(
-        _sorted_tokens("word_pos").alias("a_toks")
-    )
-    vw_arr = validator_words.groupBy(*keys).agg(
-        _sorted_tokens("start").alias("b_toks")
-    )
-    return (
-        cw_arr.join(vw_arr, keys)
-        .select(*keys, F.explode(align("a_toks", "b_toks")).alias("r"))
-        .select(*keys, "r.bi0", "r.bi1", "r.ai0", "r.ai1")
-    )

@@ -1136,7 +1136,7 @@ def pagerank_coorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the rank frame measures small). The cache's real job is that the
     # basket self-join + dedup + degree window run ONCE; measured
     # whole-query shuffle at sf0.1: old shape 92.1/85.8 MB read/write
-    # vs this shape 65.7/59.5 MB (scripts + OPTIMIZATION_r13.md).
+    # vs this shape 65.7/59.5 MB (OPTIMIZATION_r13.md §3).
     src = hold(
         "pagerank_edges",
         a.join(b, "ok")

@@ -314,7 +314,8 @@ def _ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
     separate sizes aggregation (a third and fourth evaluation of the
     whole tokenize→shingle chain, one per join side) plus TWO joins of
     the pair set back against it. Measured on a 50k-doc near-dup
-    fixture (243 840 pairs, scripts/jaccard_scale_r12.py): wall
+    fixture (243 840 pairs; SCALING.md "Carried-n Jaccard core at
+    50k docs", OPTIMIZATION_r12.md §3): wall
     −26% with the sizes joins broadcast, −20% with broadcasts forced
     off — the win is the two removed chain evaluations + two removed
     join stages. Shuffle BYTES are geometry-dependent: carried-n
@@ -431,16 +432,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------
 
 
-# Which frame the LSH candidate join persists: "doc" caches the compact
-# per-doc fingerprint frame (bands derived from the cache on each join
-# side); "band" caches the exploded band frame (16 rows/doc, no
-# re-derivation). scripts/minhash_headtohead.py flips this knob to
-# measure the two shapes interleaved run-for-run on the same session.
-_BAND_PERSIST_DEFAULT = "doc"
-
-
 def _band_pairs(
-    base: DataFrame, band_structs, payload: str, persist_mode: str | None = None
+    base: DataFrame, band_structs, payload: str, persist: bool = True
 ) -> DataFrame:
     """Candidate pairs via self-join on the band bucket key, with the
     COMPACT per-doc fingerprint frame persisted (one row per doc) and
@@ -453,7 +446,7 @@ def _band_pairs(
     for MinHash); the explode itself is codegen over the cache scan —
     re-running it per side costs nothing compared to re-running the
     kernel or caching the duplication. Settled by the interleaved
-    head-to-head (scripts/minhash_headtohead.py, round 5, 14 samples
+    head-to-head (SCALING.md "Round-5 burst forensics", 14 samples
     per shape alternated run-for-run on one session): per-doc persist
     min 3.76 s vs per-band 4.12 s at sf0.1 — ~10% faster, and the
     r4 driver's 8.22 s sample was a host-load burst (identical plans
@@ -463,25 +456,25 @@ def _band_pairs(
     against the single-shuffle shape (groupBy bucket + double-explode
     pair expansion): the hash self-join is ~4× faster.
 
+    ``persist=False`` skips the hold, for a ``base`` that is already
+    read through a cache.
+
     ``band_structs``: array<struct<band_id, band_key>> column derived
     from ``base``'s columns. Returns columns ``x``/``y``: structs of
     (doc_id, <payload>).
     """
     from ..caching import hold
 
-    # EAGER holds: the self-join below references the cached frame
+    # EAGER hold: the self-join below references the cached frame
     # from both aliases, and a lazily-populated persist lets the two
     # branch stages race — each side then runs the fingerprint kernel
     # itself (see caching.hold's docstring; observed at the 500k-doc
     # fixture as multiple ArrowEvalPython evaluations in one action).
-    mode = persist_mode or _BAND_PERSIST_DEFAULT
-    if mode == "doc":
+    if persist:
         base = hold(f"band_pairs:{payload}", base, eager=True)
     bands = base.select(
         "doc_id", payload, F.explode(band_structs).alias("band")
     ).select("doc_id", payload, "band.band_id", "band.band_key")
-    if mode == "band":
-        bands = hold(f"band_pairs:{payload}", bands, eager=True)
     a = bands.alias("a")
     b = bands.alias("b")
     return a.join(
@@ -507,15 +500,6 @@ _MINHASH_PARAMS = [
 ]
 
 
-def _minhash_params_lit():
-    return F.array(
-        *[
-            F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-            for a, b in _MINHASH_PARAMS
-        ]
-    )
-
-
 def minhash_signature_col(shingles, hash_transform=None):
     """64-slot MinHash signature: sig[k] = min over shingles of
     (aₖ·h(shingle)+bₖ) mod p, p = 2³¹−1. ``hash_transform`` overrides
@@ -539,8 +523,9 @@ def minhash_signature_col(shingles, hash_transform=None):
     64 INDEPENDENT ``array_min(transform(...))`` expressions over a
     pre-projected hash-array attribute (:func:`minhash_sig_from_hashes`)
     beat this kernel ~4x warm steady-state — canonical measurement
-    (scripts/scaling_r11.py, 500k docs, same session, identical
-    checksums): 47.6 s jvm-hof vs 191.1 s pandas, both warm; cold
+    (SCALING.md "Round-11: the Python boundary leaves the MinHash hot
+    path", 500k docs, same session, identical checksums): 47.6 s
+    jvm-hof vs 191.1 s pandas, both warm; cold
     first runs in that session 979.4 s / 525 s (SCALING.md r11
     cold-JIT record). An earlier same-round session read 46.6 vs
     289.7 s — the pandas side there was first-run/burst-hit, so the
@@ -615,7 +600,7 @@ def minhash_sig_from_hashes(hashes):
     inline) would recompute shingling+xxhash64 PER PERMUTATION — 64×
     the scan work. As an attribute it is one row-field read.
 
-    Measured (scripts/scaling_r11.py, 500k docs, identical checksums
+    Measured (SCALING.md "Round-11", 500k docs, identical checksums
     across kernels; canonical warm steady-state pair, same session):
     47.6 s vs the numpy pandas-UDF kernel's 191.1 s (~4x), and an
     explode+codegen-agg form's 55.2 s (which also tripled the
@@ -701,7 +686,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins ×4) otherwise each re-read the shuffle and re-run the
     window; a racing branch before the cache fills recomputes a
     window-over-shuffle-read, never the kernel. Three-arm interleaved
-    A/B at sf0.1 (scripts/minhash_ab_r13.py + OPTIMIZATION_r13.md):
+    A/B at sf0.1 (OPTIMIZATION_r13.md §1):
     hybrid 1.92/2.1–2.2 s vs old 2.25/2.4–2.5 s vs no-hold
     2.43/2.6–2.8 s; pair sets identical across all arms.
     Tradeoff recorded: the window ships every signature row through
@@ -810,9 +795,9 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         / _N_HASHES
     )
     rep_pairs = (
-        # "none": reps is a projection of the already-persisted groups
-        # cache — a third materialization would buy nothing
-        _band_pairs(reps, band_structs, "sig", persist_mode="none")
+        # no hold: reps is read through the lazily held windowed
+        # signature frame, so a second cache would buy nothing
+        _band_pairs(reps, band_structs, "sig", persist=False)
         .select(
             F.col("x.doc_id").alias("doc_a"),
             F.col("y.doc_id").alias("doc_b"),
@@ -1110,10 +1095,6 @@ _HAMMING_MAX = 3
 _BIT_MASKS = [(1 << b) if b < 63 else -(1 << 63) for b in range(64)]
 
 
-def _masks_lit():
-    return F.array(*[F.lit(m).cast("long") for m in _BIT_MASKS])
-
-
 def simhash_col(tokens, hash_transform=None):
     """64-bit SimHash of a token array (duplicates = weights).
     ``hash_transform`` overrides the token→int64 hash (default
@@ -1359,7 +1340,8 @@ def dedup_ngram_jaccard_stopshingle(spark: SparkSession, sf_dir: str) -> DataFra
     # na/nb leave the pair aggregation as groupBy keys (functionally
     # dependent on doc_a/doc_b — partial aggregation preserved, values
     # unchanged; the oracle hash pins it). Tradeoff, measured on both
-    # corpus shapes (scripts/stopshingle_scale_r13.py): the window
+    # corpus shapes (SCALING.md "Window-form carried-n for the
+    # df-capped pair cores", OPTIMIZATION_r13.md §2): the window
     # form trades two |pairs|-sized exchanges for one index-sized one,
     # so it wins exactly when pairs dominate the index — the dup-dense
     # regime this operator targets; numbers in OPTIMIZATION_r13.md.

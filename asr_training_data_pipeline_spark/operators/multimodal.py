@@ -166,14 +166,6 @@ def frame_sample(media: DataFrame, every_n: int = 1000) -> DataFrame:
     )
 
 
-_FEATURES_ORACLE = """
-SELECT doc_id AS media_id,
-       cast(length(text) AS bigint) AS n_bytes,
-       cast(length(text) AS bigint) AS n_samples
-FROM documents
-"""
-
-
 @register("multimodal_audio_features", tags=("multimodal", "udf"))
 def multimodal_audio_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column decode + acoustic features through the pandas-UDF

@@ -335,9 +335,6 @@ def lsh_bucket_col(e: Column) -> Column:
 # Probed ANN variants: LSH-bucket top-k and IVF top-k (scale paths)
 # ---------------------------------------------------------------------
 
-_N_PROBE_BITS = 1  # multi-probe: also scan buckets at hamming distance ≤ 1
-
-
 @register("ann_lsh_topk", oracle=_LSH_TOPK_SQL, tags=("similarity", "lsh"))
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-probed approximate top-k: hash both sides to 12-bit sign

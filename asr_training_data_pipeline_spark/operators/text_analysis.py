@@ -2316,7 +2316,8 @@ def langid_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored split never enters an exchange at all. The r6 shape built
     per-doc rank profiles with a groupBy+window over the exploded
     trigram stream, which shuffled ~2× the scored text (291 MB at
-    500k docs — measured, scripts/scaling_r7_late.py); the kernel
+    500k docs — SCALING.md "Round-7: late-r6 operators at the 500k-doc
+    fixture"); the kernel
     emits five scalars per doc and shuffles nothing.
 
     Unicode: trigrams are CODE POINTS on both engines — and in the

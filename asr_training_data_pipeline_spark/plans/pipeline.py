@@ -24,7 +24,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..functions.exact import davg
 from ..operators.alignment import lcs_equal_runs, lcs_runs_fused
 from ..partitioning import spread_for_kernel
 from ..registry import register
@@ -84,20 +83,9 @@ def bridged_groups(runs_timed: DataFrame, p: PipelineParams = P) -> DataFrame:
     ).select("pair_id", "group_id", "bi0", "bi1", "ai0", "ai1", "run_start", "run_end")
 
 
-def group_words(words: DataFrame, groups: DataFrame) -> DataFrame:
-    """Assign each ASR word to its bridged group (idx ∈ [ai0, ai1))."""
-    g = groups.select(
-        F.col("pair_id").alias("g_pair"), "group_id", "ai0", "ai1"
-    )
-    return words.join(
-        g,
-        (F.col("pair_id") == F.col("g_pair"))
-        & (F.col("idx") >= F.col("ai0"))
-        & (F.col("idx") < F.col("ai1")),
-    ).select("pair_id", "group_id", "idx", "text", "norm", "start", "end", "confidence")
-
-
-def assemble_clips(gwords: DataFrame, groups: DataFrame, p: PipelineParams = P) -> DataFrame:
+def assemble_clips_arrays(
+    groups: DataFrame, pair_words: DataFrame, p: PipelineParams = P
+) -> DataFrame:
     """Per-group base-clip assembly (claude_research_optimal.py:308-341):
     the group's used words in order (text/norm/confidence arrays) plus
     the geometry of the assembled clip — one (start,end) ms span per
@@ -105,101 +93,19 @@ def assemble_clips(gwords: DataFrame, groups: DataFrame, p: PipelineParams = P) 
     span repaired to 1 ms, :317-327) and the total assembled length
     including the seam silence between pieces (:335-340).
 
-    Everything is JVM-side: collect_list + array_sort aggregations and
-    pure span arithmetic. The boundary math that uses these facts
-    lives downstream (validated_clips), because in the reference it
-    operates on the VALIDATOR's view of this clip, not on the raw
-    group span."""
-    agg = gwords.groupBy("pair_id", "group_id").agg(
-        F.min("start").alias("t_start"),
-        F.max("end").alias("t_end"),
-        F.count("*").cast("bigint").alias("n_words"),
-        davg("confidence", "avg_conf"),
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("idx"), F.col("text")))
-                ),
-                lambda s: s["text"],
-            ),
-            " ",
-        ).alias("clip_text"),
-        F.transform(
-            F.array_sort(F.collect_list(F.struct(F.col("idx"), F.col("norm")))),
-            lambda s: s["norm"],
-        ).alias("clip_norms"),
-        F.transform(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("idx"), F.col("confidence")))
-            ),
-            lambda s: s["confidence"],
-        ).alias("clip_confs"),
-    )
-    # Piece geometry from the runs themselves (run_start/run_end carry
-    # the first/last word times of each equal run). rint = half-even,
-    # matching the reference's int(round(x*1000)) (C7).
-    n_runs = F.count("*").cast("bigint")
-    spans_sorted = F.array_sort(
-        F.collect_list(
-            F.struct(
-                F.col("ai0"),
-                F.rint(F.col("run_start") * 1000).cast("long").alias("s"),
-                F.rint(F.col("run_end") * 1000).cast("long").alias("e"),
-            )
-        )
-    )
-    pieces = groups.groupBy("pair_id", "group_id").agg(
-        n_runs.alias("n_pieces"), spans_sorted.alias("_spans0")
-    )
-    k = F.lit(p.seam_silence_ms).cast("long")
-    n = F.size(F.col("_spans0"))
-    piece_spans = F.transform(
-        F.col("_spans0"),
-        lambda x, i: F.struct(
-            F.when(i == 0, F.greatest(x["s"] - p.start_pad_ms, F.lit(0).cast("long")))
-            .otherwise(x["s"])
-            .alias("s"),
-            F.when(i == n - 1, x["e"] + p.end_pad_ms).otherwise(x["e"]).alias("e"),
-        ),
-    )
-    # degenerate piece repair: e <= s → s + 1 (reference :326-327)
-    piece_spans = F.transform(
-        piece_spans,
-        lambda x: F.struct(
-            x["s"].alias("s"),
-            F.when(x["e"] <= x["s"], x["s"] + 1).otherwise(x["e"]).alias("e"),
-        ),
-    )
-    clip_len = (
-        F.aggregate(
-            F.col("piece_spans"),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + (x["e"] - x["s"]),
-        )
-        + k * (n - 1).cast("long")
-    )
-    return (
-        agg.join(pieces, ["pair_id", "group_id"])
-        .withColumn("piece_spans", piece_spans)
-        .withColumn("clip_len_ms", clip_len)
-        .drop("_spans0")
-    )
+    ``pair_words`` is one row per pair with the idx-ordered word arrays
+    (norms/starts/ends/texts/confs, as in
+    sources.fixtures.doc_word_arrays). Each group's words are SLICED
+    out of those arrays by its runs' [ai0, ai1) ranges, so the plan is
+    one aggregation over runs (~|words|/10 rows) plus a 1:1 join
+    against the pair-count-sized array frame: word rows never cross an
+    exchange. rint = half-even, matching the reference's
+    int(round(x*1000)) (C7).
 
-
-def assemble_clips_arrays(
-    groups: DataFrame, pair_words: DataFrame, p: PipelineParams = P
-) -> DataFrame:
-    """:func:`assemble_clips` computed by SLICING the per-pair word
-    arrays (operators.alignment.asr_pair_arrays) instead of range-
-    joining the word-row table and re-collecting it per group.
-
-    Same output schema and values; the plan drops two heavy stages —
-    the O(|words|) group-assignment join and the O(|words|) re-collect
-    aggregation — leaving one aggregation over runs (~|words|/10 rows)
-    plus a 1:1 join against the (pair-count-sized) array frame. At
-    100 TB that removes the widest shuffle in the clip path; words
-    ride the cluster once, inside the arrays they were first collected
-    into for alignment."""
+    Everything is JVM-side column arithmetic. The boundary math that
+    uses these facts lives downstream (validated_clips), because in the
+    reference it operates on the VALIDATOR's view of this clip, not on
+    the raw group span."""
     zero = F.lit(0).cast("long")
     g = groups.groupBy("pair_id", "group_id").agg(
         F.array_sort(
@@ -270,8 +176,8 @@ def assemble_clips_arrays(
     return staged.select(
         "pair_id",
         "group_id",
-        # min/max over ALL group-word times (parity with the row-form
-        # agg even if a backend emits non-monotone word timestamps)
+        # min/max over ALL group-word times, not first/last, so the
+        # span holds even if a backend emits non-monotone timestamps
         F.array_min("_starts").alias("t_start"),
         F.array_max("_ends").alias("t_end"),
         F.size("clip_confs").cast("bigint").alias("n_words"),
@@ -393,34 +299,31 @@ def full_pipeline(
     spark: SparkSession,
     sf_dir: str,
     p: PipelineParams = P,
-    persist: bool = True,
-    barrier: bool = False,
     pins: tuple[str, ...] = ("arrays", "runs", "validated"),
 ) -> dict[str, DataFrame]:
-    """The whole dataflow, lazily: returns the named intermediate
-    stages so callers pick what to materialize.
+    """The whole dataflow, lazily: returns the bridged ``groups``, the
+    ``exported`` clips and the ``rejected`` (too-short) log so callers
+    pick what to materialize.
 
-    ``persist`` pins the fan-out subtrees (the doc word arrays, runs,
-    validated) at MEMORY_AND_DISK: each feeds 2+ downstream branches
-    (arrays → fused alignment + array-sliced clip assembly; runs →
-    bridging window + per-group piece geometry; validated → exported +
-    rejected), and without a cache Spark re-executes the Python LCS
-    alignment once per branch. On a cluster the same reuse points are
-    where you'd persist (or checkpoint past the lineage) — the stages
-    above them are pandas-UDF work that does not get cheaper at scale.
+    ``pins`` names the reuse points held at MEMORY_AND_DISK through the
+    caching slot registry (guide §5: cache only what the caller's
+    action graph actually reuses):
 
-    ``pins`` narrows WHICH of the three points persist (guide §5:
-    cache only what the caller's action graph actually reuses). The
-    fan-out counts above are over ALL returned stages; a caller that
-    materializes only ``exported`` in ONE action (asr_pipeline_clips)
-    reuses just ``arrays`` (alignment side + the assemble join's
-    array side) — ``runs`` and ``validated`` each have a single
-    consumer in that action, so pinning them is a pure cache-write
-    tax (r12 interleaved A/B, same session, arms alternated:
-    arrays-only 3.35 s vs all-three 3.75 s vs none 3.49 s quiet
-    mins). Multi-action callers (summary: groups + the kept/rejected
-    split; the export sinks: clips + validated + rejections) keep the
-    default all-three.
+    - ``arrays`` (the doc word arrays) feeds both the fused alignment
+      and the array-sliced clip assembly, so every caller reuses it —
+      without it Spark re-executes the narrow fixture derivation per
+      branch.
+    - ``runs`` has one in-plan consumer (the bridging window); it pays
+      off only for callers that run several actions over the stages,
+      such as the summary (groups + the kept/rejected split).
+    - ``validated`` feeds both ``exported`` and ``rejected``; it pays
+      off when both are materialized (the summary, the export sinks).
+
+    A caller that materializes only ``exported`` in ONE action
+    (asr_pipeline_clips) pins just ``arrays``: the other two are a pure
+    cache-write tax there (r12 interleaved A/B, same session, arms
+    alternated: arrays-only 3.35 s vs all-three 3.75 s vs none 3.49 s
+    quiet mins). ``pins=()`` caches nothing.
 
     Measured scaling (local[32]): 10× the documents (50k docs,
     ~2.7M words) runs end-to-end in 3.8× the wall of the sf0.1 base —
@@ -437,7 +340,7 @@ def full_pipeline(
         # invocation's caches instead of accumulating orphans
         # (ADVICE r12: with narrowed pins, an un-re-held slot kept the
         # prior invocation's frame persisted for nobody to read).
-        if persist and name in pins:
+        if name in pins:
             return hold(f"pipeline_{name}", df)
         release(f"pipeline_{name}")
         return df
@@ -446,31 +349,13 @@ def full_pipeline(
     # the same frame (they derive from the same document row), so the
     # whole documents → arrays derivation is narrow — no explode, no
     # window, no groupBy, no join; word data never crosses an exchange
-    # (sources.fixtures.doc_word_arrays). The one cached frame feeds
-    # the fused alignment AND the array-sliced clip assembly; the word
-    # row form stays exposed for callers, lazily derived.
+    # (sources.fixtures.doc_word_arrays).
     arrays = pin("arrays", fixtures.doc_word_arrays(spark, sf_dir))
     pair_words = arrays.select("pair_id", "norms", "starts", "ends", "texts", "confs")
-    words = fixtures.asr_words_from_arrays(arrays)
-    book = fixtures.book_tokens_from_arrays(arrays)
     runs = pin("runs", lcs_runs_fused(arrays, min_run=p.min_run))
-    if persist and barrier and "runs" in pins:
-        # barrier requires the runs pin: counting an uncached frame
-        # would be a full extra job that populates nothing (ADVICE
-        # r12 — the combination became expressible with `pins`).
-        # Optional materialization barrier: populate the arrays+runs
-        # caches BEFORE the downstream action so AQE's concurrent
-        # broadcast-subtree materialization can only ever read caches.
-        # With the narrow fixture derivation the worst case without it
-        # is one duplicated cheap narrow stage (measured faster overall
-        # locally — the extra job costs more than the race), so the
-        # default is off; flip it on when the upstream of `runs` is
-        # expensive (e.g. a real ASR scan feeding the arrays).
-        runs.count()
     groups = bridged_groups(runs, p)
     # clips feeds exactly ONE consumer (the validator kernel), so it is
-    # not cached — only the true fan-out points are (pair_words, runs,
-    # validated).
+    # never cached.
     clips = assemble_clips_arrays(groups, pair_words, p)
     # F3 empty-clip guard (:488-489); with the 1 ms degenerate repair a
     # 1-run clip is always >0, so this is a structural no-op kept for
@@ -488,16 +373,7 @@ def full_pipeline(
         F.lit("too_short").alias("reason"),
         dur_ms.alias("duration_ms"),
     )
-    return dict(
-        words=words,
-        book=book,
-        runs=runs,
-        groups=groups,
-        gwords=group_words(words, groups),  # row form, lazy (legacy path)
-        clips=clips,
-        rejected=rejected,
-        exported=kept,
-    )
+    return dict(groups=groups, rejected=rejected, exported=kept)
 
 
 # ---------------------------------------------------------------------

@@ -32,11 +32,6 @@ ASR_WORDS_SCHEMA = (
     "start double, end double, confidence double"
 )
 
-VALIDATOR_WORDS_SCHEMA = (
-    "pair_id long, group_id long, text string, norm string, "
-    "start double, end double, confidence double"
-)
-
 # Module-level singleton slot: initialized once per Python worker
 # process (the pandas-UDF analog of "load the model once",
 # claude_research_optimal.py:469-471).
@@ -58,7 +53,6 @@ def _stub_model():
     scan output equals the declarative fixture derivation — the
     correctness pin for the mapInPandas plumbing.
     """
-    import pyspark.sql.functions as F  # noqa: F401 (not used; kept out of worker)
 
     def xxh(pair_id: int, text: str, idx: int) -> int:
         # xxhash64 parity with Spark is NOT required here: the stub
@@ -142,99 +136,6 @@ def asr_scan(spark: SparkSession, docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", "text").mapInPandas(run, ASR_WORDS_SCHEMA)
 
 
-def validator_scan(spark: SparkSession, clips: DataFrame) -> DataFrame:
-    """S4: validator re-transcription of assembled clips.
-
-    Input: (pair_id, group_id, clip_text, clip_start) rows. The stub
-    re-emits the clip's words with fresh timings relative to the clip
-    and drops every 11th word (consensus-LCS J2 then has real work).
-    A real faster-whisper backend plugs in via set_asr_backend.
-    """
-    factory = _BACKEND_FACTORY
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        global _MODEL
-        if _MODEL is None:
-            _MODEL = factory()
-        for pdf in batches:
-            out = []
-            for pair_id, group_id, text in zip(
-                pdf["pair_id"], pdf["group_id"], pdf["clip_text"]
-            ):
-                rows = _MODEL(int(pair_id), text)
-                for k, r in enumerate(rows):
-                    if k % 11 == 10:  # simulated validator miss
-                        continue
-                    out.append(
-                        dict(
-                            pair_id=int(pair_id),
-                            group_id=int(group_id),
-                            text=r["text"],
-                            norm=r["norm"],
-                            start=r["start"],
-                            end=r["end"],
-                            confidence=r["confidence"],
-                        )
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "pair_id",
-                    "group_id",
-                    "text",
-                    "norm",
-                    "start",
-                    "end",
-                    "confidence",
-                ],
-            )
-
-    return clips.select("pair_id", "group_id", "clip_text").mapInPandas(
-        run, VALIDATOR_WORDS_SCHEMA
-    )
-
-
-def validator_scan_arrays(spark: SparkSession, clips: DataFrame) -> DataFrame:
-    """S4 variant shaped for the consensus join: same stub backend,
-    but emits ONE row per clip with the validator's norm sequence as
-    an array column, passing the clip's own norms through.
-
-    This removes two shuffles from the consensus stage: no word-row
-    explode → no groupBy-collect on either side → the J2 alignment
-    runs directly on (clip_norms, vnorms) in the very next projection.
-    A real faster-whisper backend plugs in identically — it returns
-    word dicts per clip and only the norms ride on.
-    """
-    factory = _BACKEND_FACTORY
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        global _MODEL
-        if _MODEL is None:
-            _MODEL = factory()
-        for pdf in batches:
-            out = []
-            for pair_id, group_id, text, norms in zip(
-                pdf["pair_id"], pdf["group_id"], pdf["clip_text"], pdf["clip_norms"]
-            ):
-                rows = _MODEL(int(pair_id), text)
-                vnorms = [
-                    r["norm"]
-                    for k, r in enumerate(rows)
-                    if k % 11 != 10  # simulated validator miss (as word form)
-                ]
-                out.append((int(pair_id), int(group_id), list(norms), vnorms))
-            yield pd.DataFrame(
-                out, columns=["pair_id", "group_id", "clip_norms", "vnorms"]
-            )
-
-    return clips.select(
-        "pair_id", "group_id", "clip_text", "clip_norms"
-    ).mapInPandas(
-        run,
-        "pair_id long, group_id long, clip_norms array<string>, vnorms array<string>",
-    )
-
-
 CONSENSUS_SCHEMA = (
     "pair_id long, group_id long, best_len long, "
     "s_raw_ms long, e_raw_ms long, prev_end_ms long, next_start_ms long, "
@@ -277,8 +178,11 @@ def validator_consensus_scan(spark: SparkSession, clips: DataFrame) -> DataFrame
     Why fused: chaining MapInPandas into further Python stages holds
     two workers per task and re-ships the validator rows over Arrow;
     the consensus facts are a fixed-width row per clip, computed where
-    the validator output already lives. The word-row forms
-    (validator_scan, lcs_pairs_consensus) remain the public API.
+    the validator output already lives.
+
+    The stub validator drops every 11th word of its re-transcription,
+    so the consensus alignment has real gaps to bridge. A real
+    faster-whisper backend plugs in through ``set_asr_backend``.
     """
     import difflib
 
@@ -310,7 +214,7 @@ def validator_consensus_scan(spark: SparkSession, clips: DataFrame) -> DataFrame
                 rows = _MODEL(int(pair_id), text)
                 vwords = [
                     r for k, r in enumerate(rows) if k % 11 != 10
-                ]  # simulated validator miss (as validator_scan)
+                ]  # simulated validator miss: every 11th word
                 a = list(norms)
                 b = [w["norm"] for w in vwords]
                 best = None

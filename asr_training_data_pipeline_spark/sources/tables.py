@@ -31,11 +31,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any scale factor the
-# engine targets; used by operators to pick explicit broadcast hints.
-BROADCAST_DIMS = frozenset({"region", "nation", "supplier"})
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one star-schema table with normalized timestamp columns.
 

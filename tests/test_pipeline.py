@@ -222,8 +222,8 @@ def test_pipeline_plan_shape(spark, sf_dir):
       validator MapInPandas) — no accidental extra UDF stages
     - no join AFTER the assembly aggregation: the consensus kernel
       echoes clip facts, so scan→consensus→boundary-filter is narrow
-    - the group-assignment and piece-geometry sides are broadcast, not
-      shuffled (words stream past them)
+    - the per-group run-geometry side is broadcast against the pair
+      word arrays, not shuffled (word data never crosses an exchange)
     - no cartesian/nested-loop joins anywhere
     """
     from pyspark.sql import functions as F  # noqa: F401
@@ -232,11 +232,12 @@ def test_pipeline_plan_shape(spark, sf_dir):
     # substitutes InMemoryTableScan into NEW plans whose fragments
     # match, which would hide the operators this test pins.
     spark.catalog.clearCache()
-    stages = full_pipeline(spark, sf_dir, persist=False)
+    stages = full_pipeline(spark, sf_dir, pins=())
     plan = stages["exported"]._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas") == 1
-    # persist=False duplicates the align subtree (exported + its own
-    # branch); per subtree there is exactly one align eval.
+    # pins=() caches nothing, so the doc-arrays derivation appears once
+    # per consumer branch (alignment and the assembly join); only the
+    # alignment branch carries the align eval.
     assert plan.count("ArrowEvalPython") >= 1
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -244,7 +245,36 @@ def test_pipeline_plan_shape(spark, sf_dir):
     # fused kernel output feeds filters/projections only.
     above = plan.split("MapInPandas", 1)[0]
     assert "Join" not in above, f"unexpected join above the kernel:\n{above}"
-    assert "BroadcastHashJoin" in plan  # group-words + geometry joins
+    assert "BroadcastHashJoin" in plan  # run geometry ⋈ pair word arrays
+
+
+def test_full_pipeline_pins_hold_and_release(spark, sf_dir):
+    """``pins`` decides which reuse points hold a caching slot. A slot
+    this invocation does not pin must be RELEASED — unpersisted and
+    dropped — so a narrower call after a wider one leaves nothing of
+    the earlier invocation in executor storage."""
+    from pyspark import StorageLevel
+
+    from asr_training_data_pipeline_spark import caching
+
+    def pipeline_slots():
+        return {s for s in caching._SLOTS if s.startswith("pipeline_")}
+
+    full_pipeline(spark, sf_dir)
+    assert pipeline_slots() == {
+        "pipeline_arrays", "pipeline_runs", "pipeline_validated"
+    }
+    runs, validated = (
+        caching._SLOTS["pipeline_runs"], caching._SLOTS["pipeline_validated"]
+    )
+    full_pipeline(spark, sf_dir, pins=("arrays",))
+    assert pipeline_slots() == {"pipeline_arrays"}
+    assert runs.storageLevel == StorageLevel.NONE
+    assert validated.storageLevel == StorageLevel.NONE
+    arrays = caching._SLOTS["pipeline_arrays"]
+    full_pipeline(spark, sf_dir, pins=())
+    assert pipeline_slots() == set()
+    assert arrays.storageLevel == StorageLevel.NONE
 
 
 def test_fixture_array_parity(spark, sf_dir):
