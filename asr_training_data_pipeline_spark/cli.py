@@ -212,7 +212,6 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                 args.outdir,
                 p=_params(args),
                 pair_filter=pair_filter,
-                full_gap_ms=args.full_gap_ms,
             )
             n_files = manifest.count()
         with open(os.path.join(args.outdir, "summary.json")) as f:

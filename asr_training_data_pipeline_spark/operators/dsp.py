@@ -30,6 +30,7 @@ this stage), so no decoded audio ever crosses a shuffle.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from typing import TYPE_CHECKING
 
 import numpy as np
 import pandas as pd
@@ -38,6 +39,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
+
+if TYPE_CHECKING:
+    from ..plans.pipeline import PipelineParams
 
 MFCC_THRESHOLD = 15.0
 FLUX_THRESHOLD = 0.5
@@ -154,7 +158,7 @@ ACOUSTIC_SCHEMA = (
 def acoustic_gate(
     clips_sliced: DataFrame,
     min_dur_s: float | None = None,
-    retry_shift_ms: int = 30,
+    p: PipelineParams | None = None,
 ) -> DataFrame:
     """F7: per-clip acoustic boundary gate with one retry — the exact
     decision flow of claude_research_optimal.py:608-656.
@@ -162,26 +166,30 @@ def acoustic_gate(
     Input rows: the ``_clips_with_samples`` shape — envelope PCM plus
     piece spans and the validated [s_ms, e_ms] window. Per clip:
 
-    - assemble the base clip, slice the window, apply final fades, and
-      check the last-50 ms boundary of THAT faded piece (:610-613)
+    - assemble the base clip with ``p``'s fades and seam silence, and
+      check the last-50 ms boundary of the exported piece
+      (``sinks.exports._exported_piece``: the faded window, :610-613)
+      — the piece the writer writes under the same ``p``
     - the acoustic LOG records ``leakage``/``clean`` from this first
       check — even when a retry later fixes the clip, the log keeps
       ``leakage`` (the reference appends before retrying, :616-620)
     - on a leak: retry at e_ms−30 ONLY if that still satisfies
-      min_dur; the retry slice comes from the UNFADED base clip and is
-      checked at its very end (:630-632, both reference quirks);
-      accepted → verdict ``keep`` with the shortened e_ms and
-      tsv quality ``fixed`` (and the exported piece stays unfaded,
-      :633-636); still leaking → reject ``acoustic_leakage``
+      min_dur (``p.min_dur_s`` unless ``min_dur_s`` is given); the
+      retry slice is the 'fixed' piece — UNFADED — checked at its very
+      end (:630-632, both reference quirks); accepted → verdict
+      ``keep`` with the shortened e_ms and tsv quality ``fixed``
+      (:633-636); still leaking → reject ``acoustic_leakage``
     - retry impossible (min-dur) → reject ``acoustic_leakage_unfixable``
       (:645-652)
     """
+    from ..plans.pipeline import P
+
+    p = P if p is None else p
+    min_dur_ms = int((p.min_dur_s if min_dur_s is None else min_dur_s) * 1000)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..plans.pipeline import P
-        from ..sinks.exports import _apply_fades, _assemble_base, _slice_ms
+        from ..sinks.exports import _assemble_base, _exported_piece
 
-        min_dur_ms = int((P.min_dur_s if min_dur_s is None else min_dur_s) * 1000)
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
@@ -189,17 +197,19 @@ def acoustic_gate(
                 s_ms, e_ms = int(r.s_ms), int(r.e_ms)
                 base = _assemble_base(
                     np.asarray(r.samples, dtype=np.float32),
-                    r.rel_spans, sr, P.fade_ms, P.seam_silence_ms,
+                    r.rel_spans, sr, p.fade_ms, p.seam_silence_ms,
                 )
-                piece = _apply_fades(_slice_ms(base, s_ms, e_ms, sr), sr, P.fade_ms)
+                piece = _exported_piece(base, s_ms, e_ms, sr, p.fade_ms, fixed=False)
                 check_pos = max(0, len(piece) * 1000 // sr - 50)
                 leak, d = boundary_leakage(piece, sr, check_pos)
                 log_quality = "leakage" if leak else "clean"
                 verdict, tsv_quality, e_final = "keep", "clean", e_ms
                 if leak:
-                    e_retry = e_ms - retry_shift_ms
+                    e_retry = e_ms - 30  # the reference's fixed shift (:630)
                     if e_retry > s_ms + min_dur_ms:
-                        piece_retry = _slice_ms(base, s_ms, e_retry, sr)
+                        piece_retry = _exported_piece(
+                            base, s_ms, e_retry, sr, p.fade_ms, fixed=True
+                        )
                         leak2, _d2 = boundary_leakage(
                             piece_retry, sr, len(piece_retry) * 1000 // sr
                         )

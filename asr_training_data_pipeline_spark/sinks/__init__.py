@@ -1,6 +1,5 @@
 from .exports import (  # noqa: F401
-    export_clip_files,
-    export_full_corpus,
+    export_pair_files,
     export_pipeline_outputs,
     write_clips_tsv,
     write_json_records,

@@ -30,7 +30,6 @@ from __future__ import annotations
 
 import json
 import os
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -135,120 +134,81 @@ def _assemble_base(
     return np.concatenate(parts) if parts else np.zeros(0, dtype=np.float32)
 
 
-def _slice_ms(base: np.ndarray, s_ms: int, e_ms: int, frame_rate: int) -> np.ndarray:
-    """pydub-style ms slice (clamping, empty on inverted range)."""
-    spms = frame_rate // 1000
-    return base[s_ms * spms : max(s_ms, e_ms) * spms]
-
-
-def _assemble_piece(
-    env: np.ndarray,
-    rel_spans,
+def _exported_piece(
+    base: np.ndarray,
     s_ms: int,
     e_ms: int,
     frame_rate: int,
     fade_ms: int,
-    seam_ms: int,
+    fixed: bool,
 ) -> np.ndarray:
-    """Base-clip assembly + the validated [s_ms:e_ms] window
-    (claude_research_optimal.py:308-341, :597)."""
-    base = _assemble_base(env, rel_spans, frame_rate, fade_ms, seam_ms)
-    return _slice_ms(base, s_ms, e_ms, frame_rate)
+    """The exported piece (claude_research_optimal.py:597-606,
+    :633-636): the validated [s_ms:e_ms] window of the assembled base
+    clip (pydub-style ms slice: clamping, empty on an inverted range),
+    with the final asymmetric fades — EXCEPT an acoustically 'fixed'
+    clip, whose accepted retry slice is exported unfaded. The acoustic
+    gate judges exactly this piece and the writer writes it."""
+    spms = frame_rate // 1000
+    piece = base[s_ms * spms : max(s_ms, e_ms) * spms]
+    return piece if fixed else _apply_fades(piece, frame_rate, fade_ms)
 
 
-def export_clip_files(
-    clips_sliced: DataFrame, out_dir: str, fade_ms: int = P.fade_ms,
-    seam_ms: int = P.seam_silence_ms,
+def export_pair_files(
+    clips_sliced: DataFrame, out_dir: str, p: PipelineParams = P
 ) -> DataFrame:
-    """K1+K2: one WAV + one TXT per clip, written by the executors.
+    """K1+K2+K4+K8 in one pass per recording: for each kept clip, in
+    group_id order, assemble the exported piece ONCE, write it as
+    ``clips/clip_*.wav`` + ``.txt``, and append it plus
+    ``p.full_gap_ms`` of silence — INCLUDING after the last piece — to
+    the pair's ``full_{pair}.wav`` / ``.txt``
+    (claude_research_optimal.py:661-676: ``piece.export`` then
+    ``full_audio += piece + silent(full_gap_ms)``), named with the
+    batch wrapper's promoted convention (batch_processor.py:100-110).
 
-    Returns the manifest (pair_id, group_id, kind, n_bytes, n_frames).
-    At 100 TB ``out_dir`` is object storage; each task writes only its
-    partition's clips and nothing is collected.
+    One task per pair via applyInPandas: the corpus concatenation
+    happens where that pair's clips already live; no global collect.
+    (The reference processes one recording per process, so per-pair IS
+    its 'full'.) Returns the manifest (pair_id, group_id, kind,
+    n_bytes, n_frames); at 100 TB ``out_dir`` is object storage and
+    the driver never holds file bytes.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def write_pair(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        pair = int(key[0])
         clip_dir = os.path.join(out_dir, "clips")
         os.makedirs(clip_dir, exist_ok=True)
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                pcm = _assemble_piece(
-                    np.asarray(r.samples, dtype=np.float32),
-                    r.rel_spans, int(r.s_ms), int(r.e_ms),
-                    int(r.frame_rate), fade_ms, seam_ms,
-                )
-                # final asymmetric fades on the exported piece
-                # (:599-606) — EXCEPT acoustically 'fixed' clips, whose
-                # accepted retry slice is exported unfaded (:633-636)
-                if getattr(r, "acoustic_quality", "clean") != "fixed":
-                    pcm = _apply_fades(pcm, int(r.frame_rate), fade_ms)
-                base = os.path.join(
-                    clip_dir, f"clip_{int(r.pair_id):06d}_{int(r.group_id):04d}"
-                )
-                _write_wav(base + ".wav", pcm, int(r.frame_rate))
-                with open(base + ".txt", "w") as f:
-                    f.write(r.clip_text + "\n")
-                rows.append(
-                    (int(r.pair_id), int(r.group_id), "wav",
-                     os.path.getsize(base + ".wav"), len(pcm))
-                )
-                rows.append(
-                    (int(r.pair_id), int(r.group_id), "txt",
-                     os.path.getsize(base + ".txt"), 0)
-                )
-            yield pd.DataFrame(
-                rows, columns=["pair_id", "group_id", "kind", "n_bytes", "n_frames"]
-            )
-
-    return clips_sliced.mapInPandas(run, MANIFEST_SCHEMA)
-
-
-def export_full_corpus(
-    clips_sliced: DataFrame, out_dir: str, full_gap_ms: int = P.full_gap_ms,
-    fade_ms: int = P.fade_ms, seam_ms: int = P.seam_silence_ms,
-) -> DataFrame:
-    """K4+K8: per-recording concatenated corpus — ``full_{pair}.wav``
-    and ``full_{pair}.txt``, each exported piece followed by
-    ``full_gap_ms`` of silence INCLUDING the last
-    (claude_research_optimal.py:668: ``full_audio += piece +
-    silent(full_gap_ms)``), named with the batch wrapper's promoted
-    convention (batch_processor.py:100-110).
-
-    One task per pair via applyInPandas — concatenation happens where
-    that pair's clips already live; no global collect. (The reference
-    processes one recording per process, so per-pair IS its 'full'.)
-    """
-
-    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        os.makedirs(out_dir, exist_ok=True)
         pdf = pdf.sort_values("group_id")
         fr = int(pdf["frame_rate"].iloc[0])
-        gap = np.zeros(full_gap_ms * fr // 1000, dtype=np.float32)
-        pieces: list[np.ndarray] = []
+        gap = np.zeros(p.full_gap_ms * fr // 1000, dtype=np.float32)
+        rows, full = [], []
+
+        def write(stem: str, pcm: np.ndarray, text: str, gid: int, kind: str):
+            _write_wav(stem + ".wav", pcm, fr)
+            with open(stem + ".txt", "w") as f:
+                f.write(text + "\n")
+            rows.append((pair, gid, kind + "wav", os.path.getsize(stem + ".wav"), len(pcm)))
+            rows.append((pair, gid, kind + "txt", os.path.getsize(stem + ".txt"), 0))
+
         for r in pdf.itertuples(index=False):
-            piece = _assemble_piece(
+            base = _assemble_base(
                 np.asarray(r.samples, dtype=np.float32),
-                r.rel_spans, int(r.s_ms), int(r.e_ms), fr, fade_ms, seam_ms,
+                r.rel_spans, fr, p.fade_ms, p.seam_silence_ms,
             )
-            if getattr(r, "acoustic_quality", "clean") != "fixed":
-                piece = _apply_fades(piece, fr, fade_ms)
-            pieces.append(piece)
-            pieces.append(gap)
-        pcm = np.concatenate(pieces) if pieces else np.zeros(0, dtype=np.float32)
-        base = os.path.join(out_dir, f"full_{int(key[0]):06d}")
-        _write_wav(base + ".wav", pcm, fr)
-        with open(base + ".txt", "w") as f:
-            f.write("\n".join(pdf["clip_text"]) + "\n")
+            piece = _exported_piece(
+                base, int(r.s_ms), int(r.e_ms), fr, p.fade_ms,
+                fixed=getattr(r, "acoustic_quality", "clean") == "fixed",
+            )
+            gid = int(r.group_id)
+            write(os.path.join(clip_dir, f"clip_{pair:06d}_{gid:04d}"),
+                  piece, r.clip_text, gid, "")
+            full += [piece, gap]
+        write(os.path.join(out_dir, f"full_{pair:06d}"), np.concatenate(full),
+              "\n".join(pdf["clip_text"]), -1, "full_")
         return pd.DataFrame(
-            [
-                (int(key[0]), -1, "full_wav", os.path.getsize(base + ".wav"), len(pcm)),
-                (int(key[0]), -1, "full_txt", os.path.getsize(base + ".txt"), 0),
-            ],
-            columns=["pair_id", "group_id", "kind", "n_bytes", "n_frames"],
+            rows, columns=["pair_id", "group_id", "kind", "n_bytes", "n_frames"]
         )
 
-    return clips_sliced.groupBy("pair_id").applyInPandas(assemble, MANIFEST_SCHEMA)
+    return clips_sliced.groupBy("pair_id").applyInPandas(write_pair, MANIFEST_SCHEMA)
 
 
 def write_clips_tsv(clips: DataFrame, out_dir: str) -> None:
@@ -323,7 +283,6 @@ def export_pipeline_outputs(
     out_dir: str,
     p: PipelineParams = P,
     pair_filter=None,
-    full_gap_ms: int = 500,
 ) -> DataFrame:
     """The complete output contract in one call: run the pipeline and
     materialize every reference sink under ``out_dir``. Returns the
@@ -350,9 +309,7 @@ def export_pipeline_outputs(
     # boundaries, and the keep/reject split consistently.
     verdicts = hold(
         "acoustic_verdicts",
-        acoustic_gate(
-            _clips_with_samples(exported, audio), min_dur_s=p.min_dur_s
-        ),
+        acoustic_gate(_clips_with_samples(exported, audio), p=p),
     )
     write_json_records(
         verdicts.select(
@@ -399,15 +356,7 @@ def export_pipeline_outputs(
         F.lit(None).cast("double").alias("confidence"),
     ).unionByName(gate_rejects)
 
-    sliced = _clips_with_samples(final, audio)
-    manifest = export_clip_files(
-        sliced, out_dir, fade_ms=p.fade_ms, seam_ms=p.seam_silence_ms
-    ).unionByName(
-        export_full_corpus(
-            sliced, out_dir, full_gap_ms,
-            fade_ms=p.fade_ms, seam_ms=p.seam_silence_ms,
-        )
-    )
+    manifest = export_pair_files(_clips_with_samples(final, audio), out_dir, p)
 
     write_clips_tsv(final, out_dir)
     write_json_records(rejected, out_dir, "rejections_json")
@@ -432,7 +381,7 @@ def export_pipeline_outputs(
             "max_gap_words": p.max_gap_words,
             "max_gap_time": p.max_gap_time,
             "min_dur": p.min_dur_s,
-            "full_gap_ms": full_gap_ms,
+            "full_gap_ms": p.full_gap_ms,
         },
     )
     # K7: the batch wrapper's tally (batch_processor.py:142-179) — one

@@ -311,19 +311,20 @@ def book_tokens_windowform(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def audio_samples(spark: SparkSession, sf_dir: str, frame_rate: int = 16000) -> DataFrame:
-    """Synthetic PCM per pair: a deterministic waveform whose length
-    matches the pair's last ASR word end time — enough to exercise
-    slice/fade/silence/assembly operators on ``array<float>``.
+    """Synthetic PCM per pair with at least one ASR word: a
+    deterministic waveform whose length matches the pair's last ASR
+    word end time — enough to exercise slice/fade/silence/assembly
+    operators on ``array<double>``.
 
-    Sample i = sin-ish triangle from xxhash64(pair, i div 1000) —
-    cheap, deterministic, non-constant. Built lazily as a column
-    expression (one sequence + transform), never collected.
+    Narrow over :func:`doc_word_arrays` (the last end is the max of the
+    ``ends`` array; no explode, no groupBy), so a caller that pinned
+    those arrays (``full_pipeline``'s ``arrays`` slot) reads them from
+    the cache. Sample i = a triangle wave with an xxhash64(pair)-seeded
+    phase — cheap, deterministic, non-constant. Built lazily as a
+    column expression (one sequence + transform), never collected.
     """
-    words = asr_words(spark, sf_dir)
-    spans = words.groupBy("pair_id").agg(
-        F.max("end").alias("t_end"), F.count("*").alias("n_words")
-    )
-    n_samples = F.ceil(F.col("t_end") * frame_rate).cast("long")
+    arr = doc_word_arrays(spark, sf_dir).filter(F.size("ends") > 0)
+    n_samples = F.ceil(F.array_max("ends") * frame_rate).cast("long")
     # triangle wave with pair-seeded phase; amplitude in [-1, 1)
     samples = F.transform(
         F.sequence(F.lit(0).cast("long"), n_samples - 1),
@@ -333,9 +334,8 @@ def audio_samples(spark: SparkSession, sf_dir: str, frame_rate: int = 16000) -> 
         ).cast("double")
         / 100.0,
     )
-    return spans.select(
+    return arr.select(
         "pair_id",
         F.lit(frame_rate).alias("frame_rate"),
         samples.alias("samples"),
-        "n_words",
     )

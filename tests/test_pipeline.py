@@ -293,6 +293,21 @@ def test_fixture_array_parity(spark, sf_dir):
         pd.testing.assert_frame_equal(new, old[new.columns], check_exact=True)
 
 
+def test_audio_samples_length_matches_last_word(spark, sf_dir):
+    """Every pair with an ASR word gets exactly ceil(last word end ×
+    16 kHz) samples, and the frame carries no other columns."""
+    from pyspark.sql import functions as F
+
+    audio = fixtures.audio_samples(spark, sf_dir, 16000)
+    assert audio.columns == ["pair_id", "frame_rate", "samples"]
+    want = fixtures.asr_words(spark, sf_dir).groupBy("pair_id").agg(
+        F.ceil(F.max("end") * 16000).cast("long").alias("n")
+    )
+    got = audio.select("pair_id", F.size("samples").cast("long").alias("n"))
+    assert got.count() == want.count() > 0
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
 def test_fixture_doc_level_strip_parity_unicode(spark, tmp_path):
     """The r12 one-regex-pass-per-document normalization
     (fixtures._CLEAN_DOC_RE) must equal the per-token windowform on

@@ -62,6 +62,34 @@ def test_minhash_signature_computed_once(spark, sf_dir):
     assert "Union" in plan
 
 
+def _node_names(plan) -> list[str]:
+    """Physical operator names of a JVM plan tree, walking children
+    only — a cached relation's own plan (an InMemoryTableScan's inner
+    child) is not counted."""
+    names, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        names.append(node.nodeName())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return names
+
+
+def test_export_manifest_has_one_python_writer(spark, sf_dir):
+    """The clip files and the full corpus come from ONE per-pair
+    writer kernel: the manifest plan has exactly one
+    FlatMapGroupsInPandas, no MapInPandas writer beside it and no
+    union of two manifests. The acoustic gate's kernel sits inside its
+    cached relation and is not counted."""
+    df = REGISTRY["sink_export_manifest"].fn(spark, sf_dir)
+    names = _node_names(df._jdf.queryExecution().sparkPlan())
+    spark.catalog.clearCache()
+    assert names.count("FlatMapGroupsInPandas") == 1, names
+    assert "MapInPandas" not in names, names
+    assert "Union" not in names, names
+    assert "InMemoryTableScan" in names, names
+
+
 def test_corpus_curation_single_exchange(spark, sf_dir):
     """Scoring happens before the one content-hash shuffle; the
     exchange must carry scalars only (no token arrays)."""
