@@ -68,7 +68,11 @@ def _build_parser() -> argparse.ArgumentParser:
     # Validator (:415-420)
     ap.add_argument("--min_valid_words", type=int, default=2)
     # Engine
-    ap.add_argument("--cpus", type=int, default=None, help="local[N] threads")
+    ap.add_argument(
+        "--cpus", type=int, default=None,
+        help="local[N] threads; also the shuffle-partition and "
+        "default-parallelism count",
+    )
     ap.add_argument(
         "--limit_pairs", type=int, default=None,
         help="process only the first N pairs (smoke runs)",

@@ -24,18 +24,23 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-# (session id, analyzed-plan semantic hash, split confs) -> planned
-# partition count. The probe's answer is a function of the frame's
-# file splits, which for a given session, source frame and split
-# arithmetic does not change between query builds — memoizing it means
-# repeated builds of the same query (bench warm-ups + samples,
+# (application id, analyzed-plan semantic hash, split confs) ->
+# planned partition count. The probe's answer is a function of the
+# frame's file splits, which for a given SparkContext, source frame and
+# split arithmetic does not change between query builds — memoizing it
+# means repeated builds of the same query (bench warm-ups + samples,
 # registry sweeps, multi-site derivations over one table) pay the
 # physical-planning probe once per distinct frame, not once per call
 # (VERDICT r12 What's-wrong #3: at a 100 TB catalog the repeated probe
 # was a second split-planning pass per gated build). The split confs
 # ride in the key because tests (and operators) legitimately retune
-# maxPartitionBytes on a live session.
+# maxPartitionBytes on a live session. The application id, not the
+# session object's ``id()``, names the context: a stopped session's
+# ``id()`` can be reused by a new one, which would then read stale
+# answers. The memo keeps at most ``_NPART_CACHE_MAX`` entries and
+# evicts the oldest first.
 _NPART_CACHE: dict[tuple, int] = {}
+_NPART_CACHE_MAX = 256
 
 
 def _planned_num_partitions(df: DataFrame) -> int:
@@ -44,9 +49,9 @@ def _planned_num_partitions(df: DataFrame) -> int:
     the JVM internal-row RDD — same split arithmetic, no job, and no
     extra DeserializeToObject/Python-serializer plan built per call.
     File listing is already cached in the relation's FileIndex, so
-    this never re-lists; memoized per (session, semantic hash, split
-    confs) so even the physical planning happens once per distinct
-    frame."""
+    this never re-lists; memoized per (application, semantic hash,
+    split confs) so even the physical planning happens once per
+    distinct frame."""
     conf = df.sparkSession.conf
 
     def _opt(k: str) -> str | None:
@@ -56,7 +61,7 @@ def _planned_num_partitions(df: DataFrame) -> int:
             return None  # unset optional conf
 
     key = (
-        id(df.sparkSession),
+        df.sparkSession.sparkContext.applicationId,
         df.semanticHash(),
         _opt("spark.sql.files.maxPartitionBytes"),
         _opt("spark.sql.files.openCostInBytes"),
@@ -65,6 +70,8 @@ def _planned_num_partitions(df: DataFrame) -> int:
     n = _NPART_CACHE.get(key)
     if n is None:
         n = df._jdf.queryExecution().toRdd().getNumPartitions()
+        if len(_NPART_CACHE) >= _NPART_CACHE_MAX:
+            del _NPART_CACHE[next(iter(_NPART_CACHE))]
         _NPART_CACHE[key] = n
     return n
 

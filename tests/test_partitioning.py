@@ -1,7 +1,7 @@
 """spread_for_kernel probe contracts (r13): the gate decision must not
 build a Python-RDD conversion plan per call, and repeated builds of
-the same frame must hit the (session, semantic-hash, split-conf) memo
-instead of re-planning."""
+the same frame must hit the bounded (application, semantic-hash,
+split-conf) memo instead of re-planning."""
 
 from __future__ import annotations
 
@@ -43,6 +43,23 @@ def test_probe_memoized_per_frame_and_conf(spark):
         assert len(partitioning._NPART_CACHE) == before + 1
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", saved)
+
+
+def test_probe_memo_is_bounded(spark, monkeypatch):
+    """The memo evicts its oldest entry at ``_NPART_CACHE_MAX``."""
+    monkeypatch.setattr(partitioning, "_NPART_CACHE", {})
+    monkeypatch.setattr(partitioning, "_NPART_CACHE_MAX", 2)
+    for n in (100, 200, 300):
+        spread_for_kernel(spark.range(0, n).coalesce(1), n_target=4)
+        assert len(partitioning._NPART_CACHE) <= 2
+    assert len(partitioning._NPART_CACHE) == 2
+
+
+def test_probe_memo_keyed_by_application(spark):
+    narrow = spark.range(0, 100).coalesce(1)
+    spread_for_kernel(narrow, n_target=4)
+    app = spark.sparkContext.applicationId
+    assert any(k[0] == app for k in partitioning._NPART_CACHE)
 
 
 def test_probe_answer_matches_rdd_partitions(spark, sf_dir):

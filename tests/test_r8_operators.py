@@ -3,8 +3,9 @@ parity is covered automatically by test_oracle_parity's registry
 sweep; these tests pin the SEMANTIC claims the oracles can't express):
 
 * pagerank_coorder — rank mass conservation (up to documented floor-
-  division leak), teleport floor, and hand-checked convergence on a
-  known two-component graph via the same integer recurrence;
+  division leak), teleport floor, hand-checked convergence on a
+  known two-component graph via the same integer recurrence, and the
+  symmetric-edge precondition that lets it skip the nodes LEFT JOIN;
 * incremental_agg_retract — the merge really removes the retracted
   slice (no zero/negative groups survive, totals match a direct
   aggregate of the kept slice);
@@ -20,6 +21,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from asr_training_data_pipeline_spark import caching
 from asr_training_data_pipeline_spark.api import REGISTRY
 from asr_training_data_pipeline_spark.operators.associations import (
     _PR_ITERS,
@@ -39,6 +41,27 @@ def test_pagerank_mass_and_order(spark, sf_dir):
         assert r.pr_micro >= 0
         assert r.pr_micro < _PR_MASS
         assert r.out_degree >= 1
+
+
+@pytest.mark.parametrize(
+    "sf", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
+)
+def test_pagerank_edges_symmetric(spark, sf):
+    """pagerank_coorder drops the oracle's ``nodes LEFT JOIN contrib``
+    because every node is a destination. That holds only if the edge
+    set equals its transpose, so the destinations equal the sources
+    (the nodes). The edge frame is the one the query itself holds."""
+    REGISTRY["pagerank_coorder"].fn(spark, sf)
+    e = caching._SLOTS["pagerank_edges"].select("s", "d")
+    t = e.select(F.col("d").alias("s"), F.col("s").alias("d"))
+    assert e.count() > 0
+    assert e.exceptAll(t).count() == 0
+    assert t.exceptAll(e).count() == 0
+    srcs = e.select(F.col("s").alias("v")).distinct()
+    dsts = e.select(F.col("d").alias("v")).distinct()
+    assert srcs.exceptAll(dsts).count() == 0
+    assert dsts.exceptAll(srcs).count() == 0
+    caching.release("pagerank_edges")
 
 
 def test_pagerank_recurrence_on_known_graph(spark):
