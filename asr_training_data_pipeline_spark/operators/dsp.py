@@ -9,7 +9,7 @@ implementations of the reference's boundary-quality checks:
 - C10 ``boundary_leakage``: 2-of-3 vote over (dBFS above silence
   threshold, MFCC distance > 15, flux > 0.5)
   (claude_research_optimal.py:189-232, thresholds :409-410).
-- F7 ``acoustic_gate``: apply the vote per clip with ONE retry at
+- F7 ``gate_clip``: apply the vote per clip with ONE retry at
   e_ms−30, else reject with reason ``acoustic_leakage_unfixable``
   (claude_research_optimal.py:608-656).
 
@@ -22,9 +22,18 @@ mirroring the reference's librosa-absent degradation paths at
 :143-157, :184-187). Numeric parity with librosa is NOT claimed; the
 decision semantics (thresholds, votes, retry) are.
 
-Spark shape: everything runs inside ONE Arrow-batched pandas UDF per
-clip row — samples are already clip-local (sliced JVM-side before
-this stage), so no decoded audio ever crosses a shuffle.
+The F7 decision is ONE numpy function, ``gate_clip``, over a clip's
+assembled base (``_assemble_base``; the piece rule is
+``_exported_piece``). Two Spark shapes call it:
+
+- the export's per-pair kernel (``sinks.exports.export_pair_files``)
+  rebuilds only each clip's envelope from the pair's PCM reference
+  (``sources.fixtures.pcm_window``), gates it and writes the kept
+  piece — no decoded audio crosses the JVM or a shuffle;
+- ``acoustic_gate``, the standalone operator: one mapInPandas over
+  envelope samples sliced JVM-side
+  (``sinks.exports._clips_with_samples``), as the
+  ``acoustic_boundary_gate`` query uses it.
 """
 
 from __future__ import annotations
@@ -148,6 +157,109 @@ def boundary_leakage(
     return sum(votes) >= 2, details
 
 
+def _apply_fades(pcm: np.ndarray, frame_rate: int, fade_ms: int = 30) -> np.ndarray:
+    """C11 asymmetric fades (claude_research_optimal.py:600-606):
+    fade-in = min(max(5, fade_ms//3), len/4) ms, fade-out =
+    min(fade_ms, len/4) ms, linear amplitude ramps."""
+    n = len(pcm)
+    if n == 0:
+        return pcm
+    len_ms = n * 1000 // frame_rate
+    fin_ms = min(max(5, fade_ms // 3), len_ms // 4)
+    fout_ms = min(fade_ms, len_ms // 4)
+    fin = int(fin_ms * frame_rate / 1000)
+    fout = int(fout_ms * frame_rate / 1000)
+    out = pcm.copy()
+    if fin > 0:
+        out[:fin] *= np.linspace(0.0, 1.0, fin, endpoint=False, dtype=np.float32)
+    if fout > 0:
+        out[-fout:] *= np.linspace(1.0, 0.0, fout, endpoint=False, dtype=np.float32)[::-1]
+    return out
+
+
+def _assemble_base(
+    env: np.ndarray, rel_spans, frame_rate: int, fade_ms: int, seam_ms: int
+) -> np.ndarray:
+    """numpy analog of assemble_runs_to_clip
+    (claude_research_optimal.py:308-341): per-piece fades and seam
+    silence between pieces over the envelope slice."""
+    spms = frame_rate // 1000
+    parts: list[np.ndarray] = []
+    last = len(rel_spans) - 1
+    for i, span in enumerate(rel_spans):
+        seg = env[span["s"] * spms : span["e"] * spms]
+        parts.append(_apply_fades(np.asarray(seg, dtype=np.float32), frame_rate, fade_ms))
+        if i != last and seam_ms > 0:
+            parts.append(np.zeros(seam_ms * spms, dtype=np.float32))
+    return np.concatenate(parts) if parts else np.zeros(0, dtype=np.float32)
+
+
+def _exported_piece(
+    base: np.ndarray,
+    s_ms: int,
+    e_ms: int,
+    frame_rate: int,
+    fade_ms: int,
+    fixed: bool,
+) -> np.ndarray:
+    """The exported piece (claude_research_optimal.py:597-606,
+    :633-636): the validated [s_ms:e_ms] window of the assembled base
+    clip (pydub-style ms slice: clamping, empty on an inverted range),
+    with the final asymmetric fades — EXCEPT an acoustically 'fixed'
+    clip, whose accepted retry slice is exported unfaded. ``gate_clip``
+    judges exactly this piece and the export writes it."""
+    spms = frame_rate // 1000
+    piece = base[s_ms * spms : max(s_ms, e_ms) * spms]
+    return piece if fixed else _apply_fades(piece, frame_rate, fade_ms)
+
+
+def gate_clip(
+    env: np.ndarray,
+    rel_spans,
+    s_ms: int,
+    e_ms: int,
+    sr: int,
+    p: PipelineParams,
+    min_dur_ms: int,
+) -> tuple[str, str, str, int, dict, np.ndarray | None]:
+    """F7 for one clip — the exact decision flow of
+    claude_research_optimal.py:608-656, over the base clip assembled
+    from its envelope PCM ``env`` and piece spans ``rel_spans`` (ms,
+    relative to the envelope) with ``p``'s fades and seam silence.
+
+    Returns ``(verdict, log_quality, tsv_quality, e_ms_final, details,
+    piece)``:
+
+    - check the last-50 ms boundary of the exported piece (the faded
+      [s_ms, e_ms] window, :610-613) — the piece a clean clip writes
+    - the acoustic LOG records ``leakage``/``clean`` from this first
+      check — even when a retry later fixes the clip, the log keeps
+      ``leakage`` (the reference appends before retrying, :616-620),
+      and ``details`` are always this check's (:639-644)
+    - on a leak: retry at e_ms−30 ONLY if that still exceeds
+      ``min_dur_ms``; the retry slice is the 'fixed' piece — UNFADED —
+      checked at its very end (:630-632, both reference quirks);
+      accepted → ``keep`` with the shortened e_ms and tsv quality
+      ``fixed`` (:633-636); still leaking → ``acoustic_leakage``
+    - retry impossible (min-dur) → ``acoustic_leakage_unfixable``
+      (:645-652)
+
+    ``piece`` is the exported piece of a kept clip, None otherwise."""
+    base = _assemble_base(env, rel_spans, sr, p.fade_ms, p.seam_silence_ms)
+    piece = _exported_piece(base, s_ms, e_ms, sr, p.fade_ms, fixed=False)
+    leak, d = boundary_leakage(piece, sr, max(0, len(piece) * 1000 // sr - 50))
+    if not leak:
+        return "keep", "clean", "clean", e_ms, d, piece
+    e_retry = e_ms - 30  # the reference's fixed shift (:630)
+    if e_retry <= s_ms + min_dur_ms:
+        return "acoustic_leakage_unfixable", "leakage", "clean", e_ms, d, None
+    retry = _exported_piece(base, s_ms, e_retry, sr, p.fade_ms, fixed=True)
+    leak2, _d2 = boundary_leakage(retry, sr, len(retry) * 1000 // sr)
+    if leak2:
+        return "acoustic_leakage", "leakage", "clean", e_ms, d, None
+    return "keep", "leakage", "fixed", e_retry, d, retry
+
+
 ACOUSTIC_SCHEMA = (
     "pair_id long, group_id long, e_ms_final long, verdict string, "
     "log_quality string, tsv_quality string, "
@@ -160,71 +272,31 @@ def acoustic_gate(
     min_dur_s: float | None = None,
     p: PipelineParams | None = None,
 ) -> DataFrame:
-    """F7: per-clip acoustic boundary gate with one retry — the exact
-    decision flow of claude_research_optimal.py:608-656.
+    """F7 as a standalone operator: ``gate_clip`` per clip over rows of
+    the ``sinks.exports._clips_with_samples`` shape — envelope PCM plus
+    piece spans and the validated [s_ms, e_ms] window.
 
-    Input rows: the ``_clips_with_samples`` shape — envelope PCM plus
-    piece spans and the validated [s_ms, e_ms] window. Per clip:
-
-    - assemble the base clip with ``p``'s fades and seam silence, and
-      check the last-50 ms boundary of the exported piece
-      (``sinks.exports._exported_piece``: the faded window, :610-613)
-      — the piece the writer writes under the same ``p``
-    - the acoustic LOG records ``leakage``/``clean`` from this first
-      check — even when a retry later fixes the clip, the log keeps
-      ``leakage`` (the reference appends before retrying, :616-620)
-    - on a leak: retry at e_ms−30 ONLY if that still satisfies
-      min_dur (``p.min_dur_s`` unless ``min_dur_s`` is given); the
-      retry slice is the 'fixed' piece — UNFADED — checked at its very
-      end (:630-632, both reference quirks); accepted → verdict
-      ``keep`` with the shortened e_ms and tsv quality ``fixed``
-      (:633-636); still leaking → reject ``acoustic_leakage``
-    - retry impossible (min-dur) → reject ``acoustic_leakage_unfixable``
-      (:645-652)
-    """
+    ``p`` None → the module defaults; the retry's minimum
+    duration is ``p.min_dur_s`` unless ``min_dur_s`` is given. The
+    export runs the same ``gate_clip`` inside its per-pair kernel over
+    PCM references (``sinks.exports.export_pair_files``), so the two
+    paths return the same verdicts for the same clips."""
     from ..plans.pipeline import P
 
     p = P if p is None else p
     min_dur_ms = int((p.min_dur_s if min_dur_s is None else min_dur_s) * 1000)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..sinks.exports import _assemble_base, _exported_piece
-
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
-                sr = int(r.frame_rate)
-                s_ms, e_ms = int(r.s_ms), int(r.e_ms)
-                base = _assemble_base(
-                    np.asarray(r.samples, dtype=np.float32),
-                    r.rel_spans, sr, p.fade_ms, p.seam_silence_ms,
+                verdict, log_q, tsv_q, e_final, d, _piece = gate_clip(
+                    np.asarray(r.samples, dtype=np.float32), r.rel_spans,
+                    int(r.s_ms), int(r.e_ms), int(r.frame_rate), p, min_dur_ms,
                 )
-                piece = _exported_piece(base, s_ms, e_ms, sr, p.fade_ms, fixed=False)
-                check_pos = max(0, len(piece) * 1000 // sr - 50)
-                leak, d = boundary_leakage(piece, sr, check_pos)
-                log_quality = "leakage" if leak else "clean"
-                verdict, tsv_quality, e_final = "keep", "clean", e_ms
-                if leak:
-                    e_retry = e_ms - 30  # the reference's fixed shift (:630)
-                    if e_retry > s_ms + min_dur_ms:
-                        piece_retry = _exported_piece(
-                            base, s_ms, e_retry, sr, p.fade_ms, fixed=True
-                        )
-                        leak2, _d2 = boundary_leakage(
-                            piece_retry, sr, len(piece_retry) * 1000 // sr
-                        )
-                        if not leak2:
-                            verdict, tsv_quality, e_final = "keep", "fixed", e_retry
-                        else:
-                            # the rejection log carries the ORIGINAL
-                            # check's details (:639-644)
-                            verdict = "acoustic_leakage"
-                    else:
-                        verdict = "acoustic_leakage_unfixable"
                 rows.append(
                     (int(r.pair_id), int(r.group_id), int(e_final), verdict,
-                     log_quality, tsv_quality,
-                     d["dbfs"], d["mfcc_dist"], d["flux"], d["votes"])
+                     log_q, tsv_q, d["dbfs"], d["mfcc_dist"], d["flux"], d["votes"])
                 )
             yield pd.DataFrame(
                 rows,

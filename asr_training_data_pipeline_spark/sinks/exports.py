@@ -13,17 +13,22 @@ batch_processor.py:100-110):
 - ``word_coverage.csv``                                (K6, batch_processor.py:39-45)
 - ``batch_summary.json``                               (K7, batch_processor.py:177-179)
 
-Execution model at scale: every per-row/per-group file export runs ON
-THE EXECUTORS (mapInPandas / applyInPandas writing to shared storage)
-and returns a manifest DataFrame — the driver never holds file bytes.
-Tabular sinks are plain ``df.write`` (distributed part files). The
-only driver-side write is ``summary.json`` — a single aggregate row
-by construction.
+Execution model at scale: ONE per-pair kernel (``export_pair_files``,
+applyInPandas on the executors, writing to shared storage) receives the
+pair's clip rows plus a PCM *reference* (``fixtures.audio_refs``), not
+its samples. It rebuilds only each clip's envelope, runs the acoustic
+gate (``operators.dsp.gate_clip``) and writes the kept clips and the
+full corpus, returning the verdict and manifest rows in one schema —
+file bytes never leave the executors and no PCM is built or broadcast
+JVM-side. That output is held once; every tabular sink is a filter or
+projection of it written with plain ``df.write`` (distributed part
+files). The only write outside the executors is ``summary.json`` — a
+single aggregate row by construction.
 
 WAV encode is REAL (stdlib ``wave``, 16-bit PCM) — no codec library
 needed; fades (C11, claude_research_optimal.py:330-333,600-606) and
 silence seams (C12, :337,478,669) are numpy ramps/zeros applied in
-the writer, the last point where decoded samples exist.
+the kernel, the only place decoded samples exist.
 """
 
 from __future__ import annotations
@@ -61,37 +66,15 @@ def _write_wav(path: str, pcm: np.ndarray, frame_rate: int) -> None:
         w.writeframes(i16.tobytes())
 
 
-def _apply_fades(pcm: np.ndarray, frame_rate: int, fade_ms: int = 30) -> np.ndarray:
-    """C11 asymmetric fades (claude_research_optimal.py:600-606):
-    fade-in = min(max(5, fade_ms//3), len/4) ms, fade-out =
-    min(fade_ms, len/4) ms, linear amplitude ramps."""
-    n = len(pcm)
-    if n == 0:
-        return pcm
-    len_ms = n * 1000 // frame_rate
-    fin_ms = min(max(5, fade_ms // 3), len_ms // 4)
-    fout_ms = min(fade_ms, len_ms // 4)
-    fin = int(fin_ms * frame_rate / 1000)
-    fout = int(fout_ms * frame_rate / 1000)
-    out = pcm.copy()
-    if fin > 0:
-        out[:fin] *= np.linspace(0.0, 1.0, fin, endpoint=False, dtype=np.float32)
-    if fout > 0:
-        out[-fout:] *= np.linspace(1.0, 0.0, fout, endpoint=False, dtype=np.float32)[::-1]
-    return out
-
-
 def _clips_with_samples(clips: DataFrame, audio: DataFrame) -> DataFrame:
-    """Join exported clips to their pair's PCM and slice the clip's
-    ENVELOPE (first piece start → last piece end) JVM-side, carrying
-    the piece spans rebased to the envelope.
+    """Join clips to their pair's PCM (``fixtures.audio_samples``) and
+    slice the clip's ENVELOPE (first piece start → last piece end)
+    JVM-side, carrying the piece spans rebased to the envelope: the
+    input of the standalone ``operators.dsp.acoustic_gate``.
 
-    The exported audio is a window of the ASSEMBLED clip — per-run
-    pieces with fades, joined by seam silence
-    (claude_research_optimal.py:308-341, :597). Slicing only the
-    envelope here keeps the Arrow transfer proportional to the clip,
-    not the recording; the per-piece assembly happens in the writer
-    kernel (the last point where decoded samples exist)."""
+    The export itself does not use this: its kernel rebuilds the same
+    envelope from the pair's PCM reference (``fixtures.pcm_window``),
+    so the samples are never built or broadcast there."""
     a = audio.select("pair_id", "frame_rate", "samples")
     env_s = F.col("piece_spans")[0]["s"]
     env_e = F.element_at("piece_spans", -1)["e"]
@@ -103,112 +86,113 @@ def _clips_with_samples(clips: DataFrame, audio: DataFrame) -> DataFrame:
             (x["s"] - env_s).alias("s"), (x["e"] - env_s).alias("e")
         ),
     )
-    extra = ["acoustic_quality"] if "acoustic_quality" in clips.columns else []
     return clips.join(a, "pair_id").select(
         "pair_id",
         "group_id",
-        F.col("seg_text").alias("clip_text"),
         "frame_rate",
         F.slice("samples", start_idx, length).alias("samples"),
         rel_spans.alias("rel_spans"),
         "s_ms",
         "e_ms",
-        *extra,
     )
 
 
-def _assemble_base(
-    env: np.ndarray, rel_spans, frame_rate: int, fade_ms: int, seam_ms: int
-) -> np.ndarray:
-    """numpy analog of assemble_runs_to_clip
-    (claude_research_optimal.py:308-341): per-piece fades and seam
-    silence between pieces over the envelope slice."""
-    spms = frame_rate // 1000
-    parts: list[np.ndarray] = []
-    last = len(rel_spans) - 1
-    for i, span in enumerate(rel_spans):
-        seg = env[span["s"] * spms : span["e"] * spms]
-        parts.append(_apply_fades(np.asarray(seg, dtype=np.float32), frame_rate, fade_ms))
-        if i != last and seam_ms > 0:
-            parts.append(np.zeros(seam_ms * spms, dtype=np.float32))
-    return np.concatenate(parts) if parts else np.zeros(0, dtype=np.float32)
-
-
-def _exported_piece(
-    base: np.ndarray,
-    s_ms: int,
-    e_ms: int,
-    frame_rate: int,
-    fade_ms: int,
-    fixed: bool,
-) -> np.ndarray:
-    """The exported piece (claude_research_optimal.py:597-606,
-    :633-636): the validated [s_ms:e_ms] window of the assembled base
-    clip (pydub-style ms slice: clamping, empty on an inverted range),
-    with the final asymmetric fades — EXCEPT an acoustically 'fixed'
-    clip, whose accepted retry slice is exported unfaded. The acoustic
-    gate judges exactly this piece and the writer writes it."""
-    spms = frame_rate // 1000
-    piece = base[s_ms * spms : max(s_ms, e_ms) * spms]
-    return piece if fixed else _apply_fades(piece, frame_rate, fade_ms)
+EXPORT_SCHEMA = (
+    MANIFEST_SCHEMA
+    + ", verdict string, log_quality string, tsv_quality string, "
+    "dbfs double, mfcc_dist double, flux double, votes bigint, "
+    "e_ms_final long, seg_text string, s_ms long, clip_len_ms long, "
+    "n_keep long, n_pieces long, span_avg_conf double"
+)
+_CLIP_FACTS = ["seg_text", "s_ms", "clip_len_ms", "n_keep", "n_pieces", "span_avg_conf"]
 
 
 def export_pair_files(
-    clips_sliced: DataFrame, out_dir: str, p: PipelineParams = P
+    clips: DataFrame, refs: DataFrame, out_dir: str, p: PipelineParams = P
 ) -> DataFrame:
-    """K1+K2+K4+K8 in one pass per recording: for each kept clip, in
-    group_id order, assemble the exported piece ONCE, write it as
-    ``clips/clip_*.wav`` + ``.txt``, and append it plus
-    ``p.full_gap_ms`` of silence — INCLUDING after the last piece — to
-    the pair's ``full_{pair}.wav`` / ``.txt``
-    (claude_research_optimal.py:661-676: ``piece.export`` then
-    ``full_audio += piece + silent(full_gap_ms)``), named with the
-    batch wrapper's promoted convention (batch_processor.py:100-110).
+    """F7 + K1+K2+K4+K8 in ONE kernel per recording, over the pair's
+    PCM reference (``fixtures.audio_refs``) instead of its samples. For
+    each clip, in group_id order:
 
-    One task per pair via applyInPandas: the corpus concatenation
-    happens where that pair's clips already live; no global collect.
-    (The reference processes one recording per process, so per-pair IS
-    its 'full'.) Returns the manifest (pair_id, group_id, kind,
-    n_bytes, n_frames); at 100 TB ``out_dir`` is object storage and
-    the driver never holds file bytes.
-    """
+    1. rebuild only the clip's envelope (first piece start → last piece
+       end) with ``fixtures.pcm_window``;
+    2. run the acoustic gate (``operators.dsp.gate_clip``) on the base
+       assembled from it with ``p``'s fades and seam silence;
+    3. if kept, write the gated piece as ``clips/clip_*.wav`` + ``.txt``
+       and append it plus ``p.full_gap_ms`` of silence — INCLUDING
+       after the last piece — to the pair's ``full_{pair}.wav`` /
+       ``.txt`` (claude_research_optimal.py:661-676: ``piece.export``
+       then ``full_audio += piece + silent(full_gap_ms)``), named with
+       the batch wrapper's promoted convention
+       (batch_processor.py:100-110). A pair with no kept clip writes
+       no ``full_*``.
 
-    def write_pair(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+    Returns ``EXPORT_SCHEMA``: one ``kind = 'clip'`` row per clip (the
+    verdict, its log/tsv qualities and boundary details, the final
+    e_ms, and the clip facts the sinks read) plus the file-manifest
+    rows (``kind`` wav/txt/full_wav/full_txt with n_bytes/n_frames),
+    each kind leaving the other's columns null. One task per pair via
+    applyInPandas: the corpus concatenation happens where that pair's
+    clips already live; no global collect, and at 100 TB ``out_dir``
+    is object storage, so file bytes never leave the executors."""
+    from ..operators.dsp import gate_clip
+
+    min_dur_ms = int(p.min_dur_s * 1000)
+    cols = [f.split()[0] for f in EXPORT_SCHEMA.split(", ")]
+    clip_cols_null = [None] * (len(cols) - 5)  # a manifest row's clip columns
+
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pair = int(key[0])
         clip_dir = os.path.join(out_dir, "clips")
         os.makedirs(clip_dir, exist_ok=True)
         pdf = pdf.sort_values("group_id")
-        fr = int(pdf["frame_rate"].iloc[0])
-        gap = np.zeros(p.full_gap_ms * fr // 1000, dtype=np.float32)
-        rows, full = [], []
+        fr, n, phase = (int(pdf[c].iloc[0]) for c in ("frame_rate", "n_samples", "phase"))
+        spms = fr // 1000
+        gap = np.zeros(p.full_gap_ms * spms, dtype=np.float32)
+        rows, full, texts = [], [], []
 
         def write(stem: str, pcm: np.ndarray, text: str, gid: int, kind: str):
             _write_wav(stem + ".wav", pcm, fr)
             with open(stem + ".txt", "w") as f:
                 f.write(text + "\n")
-            rows.append((pair, gid, kind + "wav", os.path.getsize(stem + ".wav"), len(pcm)))
-            rows.append((pair, gid, kind + "txt", os.path.getsize(stem + ".txt"), 0))
+            for ext, n_frames in (("wav", len(pcm)), ("txt", 0)):
+                size = os.path.getsize(f"{stem}.{ext}")
+                rows.append((pair, gid, kind + ext, size, n_frames, *clip_cols_null))
 
         for r in pdf.itertuples(index=False):
-            base = _assemble_base(
-                np.asarray(r.samples, dtype=np.float32),
-                r.rel_spans, fr, p.fade_ms, p.seam_silence_ms,
-            )
-            piece = _exported_piece(
-                base, int(r.s_ms), int(r.e_ms), fr, p.fade_ms,
-                fixed=getattr(r, "acoustic_quality", "clean") == "fixed",
+            env_s = int(r.piece_spans[0]["s"])
+            env = fixtures.pcm_window(
+                n, phase, env_s * spms, int(r.piece_spans[-1]["e"]) * spms
+            ).astype(np.float32)
+            rel = [{"s": x["s"] - env_s, "e": x["e"] - env_s} for x in r.piece_spans]
+            verdict, log_q, tsv_q, e_final, d, piece = gate_clip(
+                env, rel, int(r.s_ms), int(r.e_ms), fr, p, min_dur_ms
             )
             gid = int(r.group_id)
-            write(os.path.join(clip_dir, f"clip_{pair:06d}_{gid:04d}"),
-                  piece, r.clip_text, gid, "")
-            full += [piece, gap]
-        write(os.path.join(out_dir, f"full_{pair:06d}"), np.concatenate(full),
-              "\n".join(pdf["clip_text"]), -1, "full_")
-        return pd.DataFrame(
-            rows, columns=["pair_id", "group_id", "kind", "n_bytes", "n_frames"]
-        )
+            rows.append(
+                (pair, gid, "clip", None, None, verdict, log_q, tsv_q,
+                 d["dbfs"], d["mfcc_dist"], d["flux"], d["votes"], int(e_final),
+                 *(getattr(r, c) for c in _CLIP_FACTS))
+            )
+            if piece is not None:
+                write(os.path.join(clip_dir, f"clip_{pair:06d}_{gid:04d}"),
+                      piece, r.seg_text, gid, "")
+                full += [piece, gap]
+                texts.append(r.seg_text)
+        if full:
+            write(os.path.join(out_dir, f"full_{pair:06d}"), np.concatenate(full),
+                  "\n".join(texts), -1, "full_")
+        return pd.DataFrame(rows, columns=cols, dtype=object)
 
-    return clips_sliced.groupBy("pair_id").applyInPandas(write_pair, MANIFEST_SCHEMA)
+    return (
+        clips.join(refs, "pair_id")
+        .select(
+            "pair_id", "group_id", "e_ms", "piece_spans", *_CLIP_FACTS,
+            "frame_rate", "n_samples", "phase",
+        )
+        .groupBy("pair_id")
+        .applyInPandas(run, EXPORT_SCHEMA)
+    )
 
 
 def write_clips_tsv(clips: DataFrame, out_dir: str) -> None:
@@ -227,13 +211,8 @@ def write_clips_tsv(clips: DataFrame, out_dir: str) -> None:
         F.col("n_pieces").alias("pieces"),
         F.col("span_avg_conf").alias("avg_conf"),
         # clean / fixed from the acoustic gate (reference default-on,
-        # claude_research_optimal.py:411, :614-636); "not_checked"
-        # only when the gate was skipped upstream
-        (
-            F.col("acoustic_quality")
-            if "acoustic_quality" in clips.columns
-            else F.lit("not_checked")
-        ).alias("acoustic_quality"),
+        # claude_research_optimal.py:411, :614-636)
+        "acoustic_quality",
     )
     (
         out.write.mode("overwrite")
@@ -288,11 +267,18 @@ def export_pipeline_outputs(
     materialize every reference sink under ``out_dir``. Returns the
     file manifest (clip + full corpus files).
 
+    The acoustic gate (F7, default-on like the reference,
+    claude_research_optimal.py:411) and every file write run in ONE
+    per-pair kernel (``export_pair_files``) whose output is held once;
+    each other sink — the acoustic log, clips.tsv, word coverage, the
+    rejections, the batch summary, the summary counts and the returned
+    manifest — is a filter or projection of it, with no join back to
+    the clips.
+
     ``pair_filter``: optional Column predicate on pair_id to bound the
     exported subset (tests / smoke runs).
     """
     from ..caching import hold
-    from ..operators.dsp import acoustic_gate
 
     stages = full_pipeline(spark, sf_dir, p)
     exported = stages["exported"]
@@ -301,49 +287,44 @@ def export_pipeline_outputs(
         exported = exported.filter(pair_filter)
         too_short = too_short.filter(pair_filter)
 
-    audio = fixtures.audio_samples(spark, sf_dir, _FRAME_RATE)
-
-    # F7 acoustic boundary gate — default-on like the reference
-    # (claude_research_optimal.py:411): one DSP pass per clip; verdicts
-    # feed the acoustic log, the rejection log, the shortened 'fixed'
-    # boundaries, and the keep/reject split consistently.
-    verdicts = hold(
-        "acoustic_verdicts",
-        acoustic_gate(_clips_with_samples(exported, audio), p=p),
+    out = hold(
+        "export_pairs",
+        export_pair_files(
+            exported, fixtures.audio_refs(spark, sf_dir, _FRAME_RATE), out_dir, p
+        ),
     )
+    clips = out.filter(F.col("kind") == "clip")
     write_json_records(
-        verdicts.select(
+        clips.select(
             "pair_id", "group_id", F.col("log_quality").alias("quality"),
             "dbfs", "mfcc_dist", "flux", "votes",
         ),
         out_dir,
         "acoustic_validation_json",
     )
-    keep = verdicts.filter(F.col("verdict") == "keep").select(
-        "pair_id", "group_id", "e_ms_final",
+    final = clips.filter(F.col("verdict") == "keep").select(
+        "pair_id",
+        "group_id",
+        "seg_text",
+        "n_keep",
+        "n_pieces",
+        "span_avg_conf",
         F.col("tsv_quality").alias("acoustic_quality"),
-    )
-    final = (
-        exported.join(keep, ["pair_id", "group_id"])
-        .withColumn("e_ms", F.col("e_ms_final"))
-        .drop("e_ms_final")
-        .withColumn(
-            "duration_s",
+        # the exported piece is base[s_ms:e_ms_final], clamped (:597)
+        (
             F.greatest(
-                F.least(F.col("e_ms"), F.col("clip_len_ms"))
+                F.least(F.col("e_ms_final"), F.col("clip_len_ms"))
                 - F.least(F.col("s_ms"), F.col("clip_len_ms")),
                 F.lit(0).cast("long"),
             ).cast("double")
-            / 1000.0,
-        )
+            / 1000.0
+        ).alias("duration_s"),
     )
-    gate_rejects = (
-        verdicts.filter(F.col("verdict") != "keep")
-        .join(
-            exported.select("pair_id", "group_id", "span_avg_conf"),
-            ["pair_id", "group_id"],
-        )
-        .select(
+    rejected = too_short.select(
+        "pair_id", "group_id", "reason", "duration_ms",
+        F.lit(None).cast("double").alias("confidence"),
+    ).unionByName(
+        clips.filter(F.col("verdict") != "keep").select(
             "pair_id",
             "group_id",
             F.col("verdict").alias("reason"),
@@ -351,19 +332,24 @@ def export_pipeline_outputs(
             F.col("span_avg_conf").alias("confidence"),
         )
     )
-    rejected = too_short.select(
-        "pair_id", "group_id", "reason", "duration_ms",
-        F.lit(None).cast("double").alias("confidence"),
-    ).unionByName(gate_rejects)
-
-    manifest = export_pair_files(_clips_with_samples(final, audio), out_dir, p)
 
     write_clips_tsv(final, out_dir)
     write_json_records(rejected, out_dir, "rejections_json")
     write_word_coverage_csv(final, out_dir)
 
-    n_exported = final.count()
-    n_rejected = rejected.count()
+    # one job for both counts: a conditional aggregation over the held
+    # clip rows ∪ the too-short rows (as asr_pipeline_summary does)
+    split = (
+        clips.select((F.col("verdict") == "keep").alias("kept"))
+        .unionAll(too_short.select(F.lit(False).alias("kept")))
+        .groupBy()
+        .agg(
+            F.count_if(F.col("kept")).alias("n_exported"),
+            F.count_if(~F.col("kept")).alias("n_rejected"),
+        )
+        .first()
+    )
+    n_exported, n_rejected = split["n_exported"], split["n_rejected"]
     rate = (
         round(100.0 * n_rejected / (n_exported + n_rejected), 2)
         if (n_exported + n_rejected)
@@ -392,7 +378,9 @@ def export_pipeline_outputs(
         "pair_id", F.lit("ok").alias("status"), "n_clips"
     )
     write_json_records(details, out_dir, "batch_summary_json")
-    return manifest
+    return out.filter(F.col("kind") != "clip").select(
+        "pair_id", "group_id", "kind", "n_bytes", "n_frames"
+    )
 
 
 # ---------------------------------------------------------------------

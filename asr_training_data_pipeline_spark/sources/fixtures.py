@@ -28,6 +28,8 @@ explode+window formulation is locked by
 
 from __future__ import annotations
 
+import numpy as np
+
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -310,32 +312,49 @@ def book_tokens_windowform(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def audio_samples(spark: SparkSession, sf_dir: str, frame_rate: int = 16000) -> DataFrame:
-    """Synthetic PCM per pair with at least one ASR word: a
-    deterministic waveform whose length matches the pair's last ASR
-    word end time — enough to exercise slice/fade/silence/assembly
-    operators on ``array<double>``.
+def audio_refs(spark: SparkSession, sf_dir: str, frame_rate: int = 16000) -> DataFrame:
+    """The PCM *reference* of each pair with at least one ASR word:
+    ``(pair_id, frame_rate, n_samples, phase)`` — the two integers that
+    fully determine :func:`audio_samples`' waveform, so a kernel can
+    rebuild any window of it with :func:`pcm_window` instead of
+    receiving the samples.
 
     Narrow over :func:`doc_word_arrays` (the last end is the max of the
     ``ends`` array; no explode, no groupBy), so a caller that pinned
     those arrays (``full_pipeline``'s ``arrays`` slot) reads them from
-    the cache. Sample i = a triangle wave with an xxhash64(pair)-seeded
-    phase — cheap, deterministic, non-constant. Built lazily as a
-    column expression (one sequence + transform), never collected.
-    """
+    the cache. ``n_samples`` covers the pair's last ASR word end time;
+    ``phase`` is xxhash64(pair)-seeded."""
     arr = doc_word_arrays(spark, sf_dir).filter(F.size("ends") > 0)
-    n_samples = F.ceil(F.array_max("ends") * frame_rate).cast("long")
-    # triangle wave with pair-seeded phase; amplitude in [-1, 1)
-    samples = F.transform(
-        F.sequence(F.lit(0).cast("long"), n_samples - 1),
-        lambda i: (
-            F.pmod(i + F.pmod(F.xxhash64(F.col("pair_id")), F.lit(997)), F.lit(200))
-            - 100
-        ).cast("double")
-        / 100.0,
-    )
     return arr.select(
         "pair_id",
         F.lit(frame_rate).alias("frame_rate"),
-        samples.alias("samples"),
+        F.ceil(F.array_max("ends") * frame_rate).cast("long").alias("n_samples"),
+        F.pmod(F.xxhash64(F.col("pair_id")), F.lit(997)).alias("phase"),
     )
+
+
+def pcm_window(n_samples: int, phase: int, lo: int, hi: int) -> np.ndarray:
+    """Samples ``[lo, hi)`` of the waveform a reference names, clamped
+    to the recording like ``F.slice(samples, lo + 1, hi - lo)`` (empty
+    when ``lo`` is past the end). Bit-identical to
+    :func:`audio_samples`: sample i is the integer triangle
+    ``(i + phase) % 200 - 100`` divided by 100.0, exactly as the JVM
+    computes it."""
+    i = np.arange(min(lo, n_samples), min(hi, n_samples), dtype=np.int64)
+    return ((i + phase) % 200 - 100).astype(np.float64) / 100.0
+
+
+def audio_samples(spark: SparkSession, sf_dir: str, frame_rate: int = 16000) -> DataFrame:
+    """Synthetic PCM per pair as ``array<double>``: the waveform of
+    :func:`audio_refs` materialized JVM-side — a triangle wave with a
+    pair-seeded phase, amplitude in [-1, 1), whose length matches the
+    pair's last ASR word end time. Built lazily as a column expression
+    (one sequence + transform), never collected. Operators that need
+    only a clip's window read the reference instead."""
+    refs = audio_refs(spark, sf_dir, frame_rate)
+    samples = F.transform(
+        F.sequence(F.lit(0).cast("long"), F.col("n_samples") - 1),
+        lambda i: (F.pmod(i + F.col("phase"), F.lit(200)) - 100).cast("double")
+        / 100.0,
+    )
+    return refs.select("pair_id", "frame_rate", samples.alias("samples"))

@@ -308,6 +308,50 @@ def test_audio_samples_length_matches_last_word(spark, sf_dir):
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
 
 
+def test_pcm_window_rebuilds_audio_samples(spark, sf_dir):
+    """The export's PCM reference is exact: for every pair,
+    ``audio_refs.n_samples`` is the length of ``audio_samples``, and
+    ``pcm_window`` equals ``F.slice(samples, lo + 1, hi - lo)``
+    bit for bit — an interior window, one clamped at the end of the
+    recording, and one starting past the end (empty)."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    refs = fixtures.audio_refs(spark, sf_dir, 16000)
+    audio = fixtures.audio_samples(spark, sf_dir, 16000)
+    n = F.col("n_samples")
+    windows = {
+        "interior": (n / 3, n / 3 + 800),
+        "end": (n - 100, n + 500),
+        "past": (n + 10, n + 100),
+    }
+    cols = []
+    for name, (lo, hi) in windows.items():
+        lo, hi = lo.cast("int"), hi.cast("int")
+        cols += [
+            lo.alias(f"{name}_lo"),
+            hi.alias(f"{name}_hi"),
+            F.slice("samples", lo + 1, hi - lo).alias(name),
+        ]
+    rows = (
+        refs.join(audio, ["pair_id", "frame_rate"])
+        .select("pair_id", "n_samples", "phase", F.size("samples").alias("size"), *cols)
+        .collect()
+    )
+    assert len(rows) == refs.count() == audio.count() > 0
+    for r in rows:
+        assert r.n_samples == r.size, r.pair_id
+        for name in windows:
+            got = fixtures.pcm_window(
+                r.n_samples, r.phase, r[f"{name}_lo"], r[f"{name}_hi"]
+            )
+            want = np.asarray(r[name], dtype=np.float64)
+            assert got.dtype == want.dtype and got.tobytes() == want.tobytes(), (
+                r.pair_id, name,
+            )
+        assert len(r["end"]) == 100 and len(r["past"]) == 0
+
+
 def test_fixture_doc_level_strip_parity_unicode(spark, tmp_path):
     """The r12 one-regex-pass-per-document normalization
     (fixtures._CLEAN_DOC_RE) must equal the per-token windowform on

@@ -62,32 +62,63 @@ def test_minhash_signature_computed_once(spark, sf_dir):
     assert "Union" in plan
 
 
-def _node_names(plan) -> list[str]:
-    """Physical operator names of a JVM plan tree, walking children
-    only — a cached relation's own plan (an InMemoryTableScan's inner
-    child) is not counted."""
-    names, stack = [], [plan]
+def _plan_nodes(plan, stop=()) -> list:
+    """Physical operator nodes of a JVM plan tree, descending through
+    AQE wrappers, query stages and cached relations (an
+    InMemoryTableScan's ``relation().cachedPlan()``), except into the
+    relations whose cache builder is in ``stop``."""
+    nodes, stack = [], [plan]
     while stack:
         node = stack.pop()
-        names.append(node.nodeName())
-        kids = node.children()
-        stack.extend(kids.apply(i) for i in range(kids.size()))
-    return names
+        nodes.append(node)
+        name = node.nodeName()
+        if name == "InMemoryTableScan":
+            rel = node.relation()
+            if not any(rel.cacheBuilder().equals(b) for b in stop):
+                stack.append(rel.cachedPlan())
+        elif name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            stack.append(node.plan())
+        elif name == "ReusedExchange":
+            stack.append(node.child())
+        else:
+            kids = node.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+    return nodes
 
 
-def test_export_manifest_has_one_python_writer(spark, sf_dir):
-    """The clip files and the full corpus come from ONE per-pair
-    writer kernel: the manifest plan has exactly one
-    FlatMapGroupsInPandas, no MapInPandas writer beside it and no
-    union of two manifests. The acoustic gate's kernel sits inside its
-    cached relation and is not counted."""
+def _seq(jseq) -> list:
+    return [jseq.apply(i) for i in range(jseq.size())]
+
+
+def test_export_is_one_kernel_over_pcm_references(spark, sf_dir):
+    """The whole export — the returned manifest's plan and the frame it
+    holds, down to the stages ``full_pipeline`` pins (their own plan is
+    the pipeline's) — runs ONE Python kernel, the per-pair
+    FlatMapGroupsInPandas that gates and writes: no MapInPandas gate
+    beside it, no union of manifests, and no PCM samples anywhere (no node outputs
+    ``samples``, no ``sequence(`` expression builds them)."""
+    from asr_training_data_pipeline_spark import caching
+
     df = REGISTRY["sink_export_manifest"].fn(spark, sf_dir)
-    names = _node_names(df._jdf.queryExecution().sparkPlan())
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    pins = [
+        cache.lookupCachedData(held._jdf).get().cachedRepresentation().cacheBuilder()
+        for slot, held in caching._SLOTS.items()
+        if slot.startswith("pipeline_")
+    ]
+    assert pins
+    nodes = _plan_nodes(df._jdf.queryExecution().sparkPlan(), stop=pins)
+    names = [n.nodeName() for n in nodes]
+    outputs = {a.name() for n in nodes for a in _seq(n.output())}
+    exprs = [e.toString() for n in nodes for e in _seq(n.expressions())]
     spark.catalog.clearCache()
     assert names.count("FlatMapGroupsInPandas") == 1, names
     assert "MapInPandas" not in names, names
     assert "Union" not in names, names
-    assert "InMemoryTableScan" in names, names
+    assert "samples" not in outputs, outputs
+    assert not [e for e in exprs if "sequence(" in e]
 
 
 def test_corpus_curation_single_exchange(spark, sf_dir):

@@ -152,6 +152,36 @@ def test_gate_judges_the_written_piece(spark, sf_dir, tmp_path):
         assert abs(d["dbfs"] - r.dbfs) <= 0.05, (r.pair_id, r.group_id, d["dbfs"], r.dbfs)
 
 
+@pytest.mark.parametrize(
+    "p",
+    [PipelineParams(), PipelineParams(fade_ms=60, seam_silence_ms=200)],
+    ids=["default", "fade60_seam200"],
+)
+def test_export_gate_agrees_with_acoustic_gate(spark, sf_dir, tmp_path, p):
+    """The export gates clips inside its per-pair kernel over PCM
+    references; the standalone operator gates JVM-sliced samples. For
+    the same clips and ``p``, the export's acoustic log must equal
+    ``acoustic_gate(_clips_with_samples(exported, audio_samples))``
+    row for row, values exact."""
+    from asr_training_data_pipeline_spark.operators.dsp import acoustic_gate
+    from asr_training_data_pipeline_spark.sinks.exports import _clips_with_samples
+    from asr_training_data_pipeline_spark.sources import fixtures
+
+    out = str(tmp_path)
+    export_pipeline_outputs(spark, sf_dir, out, p=p, pair_filter=_pair_filter()).count()
+    cols = ["pair_id", "group_id", "quality", "dbfs", "mfcc_dist", "flux", "votes"]
+    logged = spark.read.json(os.path.join(out, "acoustic_validation_json")).select(*cols)
+    exported = full_pipeline(spark, sf_dir, p)["exported"].filter(_pair_filter())
+    audio = fixtures.audio_samples(spark, sf_dir, 16000)
+    gated = acoustic_gate(_clips_with_samples(exported, audio), p=p).select(
+        "pair_id", "group_id", F.col("log_quality").alias("quality"),
+        "dbfs", "mfcc_dist", "flux", "votes",
+    )
+    got = sorted(tuple(r) for r in logged.collect())
+    want = sorted(tuple(r) for r in gated.collect())
+    assert got and got == want
+
+
 def test_clips_tsv_roundtrip(spark, sf_dir, exported_dir):
     out, manifest = exported_dir
     tsv = (
