@@ -6,7 +6,7 @@ The reference executes this as a sequential per-group Python loop
 (/root/reference/claude_research_optimal.py:481-670). Here every
 stage is a DataFrame transformation, so Catalyst fuses the scalar
 math into codegen stages and the only materialization points are the
-shuffles (alignment cogroup, group-by, windows) — the whole thing
+shuffles (group-by, windows; the alignment is narrow) — the whole thing
 parallelizes across pairs/groups on any cluster size.
 
 Parameter defaults mirror the reference CLI argparse exactly
@@ -24,7 +24,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..operators.alignment import lcs_equal_runs, lcs_runs_fused
+from ..operators.alignment import lcs_runs_fused
 from ..partitioning import spread_for_kernel
 from ..registry import register
 from ..sources import fixtures
@@ -58,7 +58,7 @@ def bridged_groups(runs_timed: DataFrame, p: PipelineParams = P) -> DataFrame:
     while word-gap ≤ max_gap_words AND time-gap ≤ max_gap_time.
 
     ``runs_timed`` carries run_start/run_end from the alignment stage
-    (lcs_equal_runs with_times=True) — no join back to the word table.
+    (``lcs_runs_fused``) — no join back to the word table.
     """
     timed = runs_timed.select(
         "pair_id", "bi0", "bi1", "ai0", "ai1", "run_start", "run_end"
@@ -379,16 +379,16 @@ def full_pipeline(
 # ---------------------------------------------------------------------
 # Registered queries (rows-only: order-sensitive LCS + pandas UDF
 # stages are not SQL-expressible; semantics pinned by golden tests
-# against difflib in tests/test_alignment.py / test_pipeline.py)
+# against difflib in tests/test_alignment.py / test_pipeline.py and
+# by row hashes in tests/test_goldens.py)
 # ---------------------------------------------------------------------
 
 
 @register("lcs_align_runs", tags=("alignment", "udf"))
 def lcs_align_runs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1 equal-run alignment over the derived transcript/ASR fixture."""
-    words = fixtures.asr_words(spark, sf_dir)
-    book = fixtures.book_tokens(spark, sf_dir)
-    return lcs_equal_runs(book, words, min_run=P.min_run).orderBy(
+    runs = lcs_runs_fused(fixtures.doc_word_arrays(spark, sf_dir), min_run=P.min_run)
+    return runs.select("pair_id", "bi0", "bi1", "ai0", "ai1").orderBy(
         "pair_id", "ai0"
     )
 
@@ -396,9 +396,7 @@ def lcs_align_runs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("bridge_runs_sessions", tags=("alignment", "session"))
 def bridge_runs_sessions_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1 gap-bridging of aligned runs into clip groups."""
-    words = fixtures.asr_words(spark, sf_dir)
-    book = fixtures.book_tokens(spark, sf_dir)
-    runs = lcs_equal_runs(book, words, min_run=P.min_run, with_times=True)
+    runs = lcs_runs_fused(fixtures.doc_word_arrays(spark, sf_dir), min_run=P.min_run)
     return bridged_groups(runs).orderBy("pair_id", "group_id", "ai0")
 
 

@@ -75,7 +75,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Python-heavy stages (cogrouped LCS, inference mapInPandas)
+        # Python-heavy stages (the LCS UDF, inference mapInPandas)
         # are CPU-bound per ROW, not per byte — don't let AQE coalesce
         # their shuffles down to a handful of 1 MB tasks and idle the
         # other cores. The old 64 KB floor failed its own purpose:

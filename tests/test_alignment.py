@@ -7,7 +7,8 @@ from __future__ import annotations
 
 import difflib
 
-from asr_training_data_pipeline_spark.operators.alignment import lcs_equal_runs
+from asr_training_data_pipeline_spark.api import REGISTRY
+from asr_training_data_pipeline_spark.operators.alignment import lcs_runs_fused
 from asr_training_data_pipeline_spark.sources import fixtures
 
 
@@ -15,7 +16,7 @@ def test_lcs_matches_difflib_golden(spark, sf_dir):
     words = fixtures.asr_words(spark, sf_dir)
     book = fixtures.book_tokens(spark, sf_dir)
     got = (
-        lcs_equal_runs(book, words, min_run=4)
+        lcs_runs_fused(fixtures.doc_word_arrays(spark, sf_dir), min_run=4)
         .filter("pair_id < 10")
         .toPandas()
         .sort_values(["pair_id", "ai0"])
@@ -40,20 +41,7 @@ def test_lcs_spans_reference_token_equality(spark, sf_dir):
     """Every emitted run must actually be an equal span of tokens."""
     words = fixtures.asr_words(spark, sf_dir).toPandas()
     book = fixtures.book_tokens(spark, sf_dir).toPandas()
-    runs = (
-        lcs_equal_runs(
-            *(
-                _
-                for _ in ()
-            )
-        )
-        if False
-        else None
-    )
-    # Build via Spark then check in pandas
-    from asr_training_data_pipeline_spark.api import REGISTRY
-
-    got = REGISTRY["lcs_align_runs"].fn(spark, "/root/testdata/sf0.001").toPandas()
+    got = REGISTRY["lcs_align_runs"].fn(spark, sf_dir).toPandas()
     wb = {
         pid: g.sort_values("pos")["norm"].tolist()
         for pid, g in book.groupby("pair_id")
@@ -63,6 +51,7 @@ def test_lcs_spans_reference_token_equality(spark, sf_dir):
         for pid, g in words.groupby("pair_id")
     }
     sample = got.head(200)
+    assert len(sample) > 0, "fixture must produce equal runs"
     for _, r in sample.iterrows():
         assert (
             wb[r.pair_id][r.bi0 : r.bi1] == wa[r.pair_id][r.ai0 : r.ai1]

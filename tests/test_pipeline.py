@@ -2,7 +2,7 @@
 single-threaded implementation of the reference's documented per-group
 semantics (/root/reference/claude_research_optimal.py:481-670).
 
-The Spark plan decomposes the flow into alignment cogroups, window
+The Spark plan decomposes the flow into a narrow array alignment, window
 sessionization, aggregations, and a fused validator kernel; this test
 re-derives the expected clips with plain Python/difflib from the same
 fixture word streams and checks the composition end-to-end — every

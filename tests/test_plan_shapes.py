@@ -121,6 +121,18 @@ def test_export_is_one_kernel_over_pcm_references(spark, sf_dir):
     assert not [e for e in exprs if "sequence(" in e]
 
 
+def test_alignment_queries_never_shuffle_word_rows(spark, sf_dir):
+    """The registered J1/W1 queries align each pair's two token arrays
+    where the document row carries them: no join of per-side arrays and
+    no aggregate rebuilding them from word rows."""
+    aggregates = {"HashAggregate", "SortAggregate", "ObjectHashAggregate"}
+    for name in ("lcs_align_runs", "bridge_runs_sessions"):
+        plan = REGISTRY[name].fn(spark, sf_dir)._jdf.queryExecution().executedPlan()
+        names = [n.nodeName() for n in _plan_nodes(plan)]
+        assert not [n for n in names if "Join" in n], (name, names)
+        assert not aggregates & set(names), (name, names)
+
+
 def test_corpus_curation_single_exchange(spark, sf_dir):
     """Scoring happens before the one content-hash shuffle; the
     exchange must carry scalars only (no token arrays)."""
